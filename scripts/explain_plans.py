@@ -106,13 +106,13 @@ def main():
     sections.append(("token_pack (two-level exclusive prefix sum)",
                      plan_of(em.q_token_pack(spark, SF_DIR)),
                      "Data window is partitioned by _pid (P parallel local "
-                     "cumsums after a range repartition); the offsets side "
-                     "aggregates to P rows, cumsums them in one trivially "
-                     "small partition, and broadcast-joins back. The static "
-                     "plan shows two rangepartitioning exchanges; at "
-                     "runtime AQE stage reuse executes ONE (the executed "
-                     "plan's totals branch is a ReusedExchange) — no "
-                     "data-row global Window or Sort anywhere."))
+                     "cumsums); _pid is a CASE WHEN tree over driver-"
+                     "sampled literal doc_id split points, a pure function "
+                     "of the row, so the result does not depend on "
+                     "exchange reuse or AQE. The offsets side aggregates "
+                     "to P rows, cumsums them in one trivially small "
+                     "partition, and broadcast-joins back — no data-row "
+                     "global Window or Sort anywhere."))
 
     # 12. decontaminate: exploded 8-grams hash-joined against bench grams —
     # must be BroadcastHashJoin, never BroadcastNestedLoopJoin (VERDICT r2 #2)
@@ -165,9 +165,9 @@ def main():
     sections.append(("seq_pack (fixed-length sequence packing)",
                      plan_of(em.q_seq_pack(spark, SF_DIR)),
                      "Per-doc token counts ride a two-level exclusive "
-                     "prefix sum (range exchange reused across the totals "
-                     "and cumsum branches, windows keyed by (_pid, "
-                     "source)) -> doc_id equi-join re-attaches token "
+                     "prefix sum (_pid from literal doc_id split points, "
+                     "windows keyed by (_pid, source)) -> doc_id "
+                     "equi-join re-attaches token "
                      "arrays -> Generate over ~n/128 sequence ids -> "
                      "partial+final hash agg. Tokens never transit an "
                      "exchange as rows; no single-task sort even for a "
@@ -247,7 +247,8 @@ def main():
                      "exact dedup is one hash exchange on md5(text) "
                      "(uniform key) with a WindowGroupLimit pruning dup "
                      "groups map-side; the role-keyed two-level prefix "
-                     "sum reuses one range exchange and broadcasts the "
+                     "sum takes _pid from literal conv_id split points "
+                     "sampled from the raw scan and broadcasts the "
                      "P-by-role offsets table back; the final (role, "
                      "seq_idx) agg is partial+final. The static plan "
                      "below shows the packing stage's three lineage "
@@ -255,14 +256,14 @@ def main():
                      "extraction pass — every branch carries the same 4 "
                      "columns through the md5 exchange (toks/n are "
                      "recomputed above it), so the subtrees stay "
-                     "identical and the executed plan shows TWO "
-                     "ReusedExchange nodes (dedup exchange: base+narrow; "
-                     "range exchange: totals+cumsum) — asserted by "
-                     "tests/test_plan_shapes.py::"
-                     "test_corpus_prep_single_extraction_pass. The "
-                     "bench-gram branch extracts exactly 3 rows "
-                     "(conv_id/turn_idx filters pushed to the parquet "
-                     "scan) and lands in the plan as LITERALS — at "
+                     "identical and the executed plan shows a "
+                     "ReusedExchange of the text-carrying dedup exchange "
+                     "— asserted by tests/test_plan_shapes.py::"
+                     "test_corpus_prep_single_extraction_pass. That reuse "
+                     "saves extraction passes; the packed result does "
+                     "not depend on it. The bench-gram rows (3) are "
+                     "extracted on the driver and land in the plan as "
+                     "LITERALS — at "
                      "production bench sizes the registered "
                      "decontaminate query's broadcast-hash-join shape "
                      "replaces it."))

@@ -368,14 +368,6 @@ def _iter_y4m_frames(data: bytes):
         idx += 1
 
 
-def count_y4m_frames(data: bytes) -> int:
-    """Total frame count — a decode-free header walk."""
-    n = 0
-    for _ in _iter_y4m_frames(data):
-        n += 1
-    return n
-
-
 def iter_y4m_luma(data: bytes, every_k: int = 1):
     """Yield (frame_index, luma uint8 (h, w)) for every k-th frame —
     streaming; only SAMPLED frames are decoded and only they count

@@ -1565,12 +1565,3 @@ def select(query: str, root: Element, first_only: bool = False) -> Elements:
         if kids:
             stack.extend(reversed(kids))
     return out
-
-
-def _in_subtree(el: Element, root: Element) -> bool:
-    p = el
-    while p is not None:
-        if p is root:
-            return True
-        p = p.parent
-    return False

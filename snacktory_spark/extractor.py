@@ -16,8 +16,6 @@ vectorizes over Arrow batches. Mirrors ArticleTextExtractor.extractContent
 
 from __future__ import annotations
 
-import datetime as _dt
-
 from . import constants as C
 from .author import cleanup as author_cleanup, extract_author_description, extract_author_name
 from .dom import Document, Element, parse as dom_parse
@@ -336,8 +334,3 @@ def determine_image_source(el: Element, images: list[dict]):
 def _is_ad_image(image_url: str) -> bool:
     from .shelper import count
     return count(image_url, "ad") >= 2
-
-
-def format_date(d: _dt.datetime | None) -> str | None:
-    from .dates import format_date_utc
-    return format_date_utc(d)

@@ -15,7 +15,7 @@ needs to ship to executor Python workers.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 #: quality-gate stopword probe (SURVEY §2 quality ops; tiny by design —
 #: the gate measures "has SOME function words", not language ID)
@@ -29,15 +29,6 @@ def tokens_expr(col: str = "text"):
     (gate, grams, packing) must tokenize identically or survivors drift
     between stages."""
     return F.split(F.trim(F.lower(F.col(col))), r"\s+")
-
-
-def conf_true(spark: SparkSession, key: str) -> bool:
-    """True unless the session explicitly set `key` to false (both
-    exchange-reuse knobs are default-on)."""
-    try:
-        return spark.conf.get(key).lower() == "true"
-    except Exception:
-        return True
 
 
 def zip_grams(toks_expr, k: int, m):
@@ -108,17 +99,21 @@ def seed_bench_grams(tr: DataFrame, gram_width: int = 8,
     """The demo benchmark set used by the oracled q_corpus_prep AND the
     job's equality tests: the first-`gram_width`-token gram of the
     EXTRACTED text of turn 0 of the `n_seeds` smallest conv_ids. Bounded
-    by construction (two driver collects of ≤ n_seeds rows; the
-    conv_id/turn_idx filters push to the parquet scan before the UDF
-    stage). Production jobs pass a real benchmark-gram table instead
+    by construction: two driver collects of ≤ n_seeds rows (the
+    turn_idx/conv_id filters push to the parquet scan), then the seed
+    rows are extracted ON THE DRIVER with `extract_row` — no UDF stage
+    runs. Production jobs pass a real benchmark-gram table instead
     (run_corpus_prep's bench_grams_path).
 
-    The ≤ n_seeds seed rows are extracted ON THE DRIVER with the same
-    `extract_row` the UDF stage runs (r10: a full mapInPandas job for 3
-    rows cost ~0.4s of pure stage/worker overhead per corpus_prep call;
-    the driver call is ~1 ms and bounded by the same ≤ n_seeds collect
-    this seed already does). The gram itself still evaluates through the
-    SHARED JVM `tokens_expr` on a local 1-stage DataFrame — a Python
+    Driver extraction (r10): a full mapInPandas job for 3 rows cost
+    ~0.4s of pure stage/worker overhead per corpus_prep call; the driver
+    call is ~1 ms. It must match the chain's extraction exactly:
+    `extract_row(text, "")` relies on url="" being
+    extract_map_in_pandas's default when the input has no url column —
+    threading a url column through the transcripts would make the chain
+    extract with it while the seeds would not, and the bench grams would
+    drift. The gram itself still evaluates through the SHARED JVM
+    `tokens_expr` on a local 1-stage DataFrame — a Python
     re-tokenization here could drift from the chain's tokenizer."""
     ids = [r[0] for r in (tr.filter(F.col("turn_idx") == 0)
                           .select("conv_id").distinct()
@@ -127,6 +122,7 @@ def seed_bench_grams(tr: DataFrame, gram_width: int = 8,
                            & F.col("conv_id").isin(ids))
                  .select("text").collect())
     from ..udf import extract_row
+    # url="": extract_map_in_pandas's default without a url column
     extracted = [extract_row(r["text"], "") for r in seed_rows]
     texts = [e["text"] for e in extracted if e["extract_ok"] and e["text"]]
     if not texts:
@@ -141,30 +137,69 @@ def seed_bench_grams(tr: DataFrame, gram_width: int = 8,
     return sorted({r["gram"] for r in rows})
 
 
-def pack_sequences(spark: SparkSession, base: DataFrame, narrow: DataFrame,
-                   group_col: str, order_cols, seq_len: int) -> DataFrame:
-    """Fixed-length packing via the two-level exclusive prefix sum — the
-    ONE copy of the plan-shape-sensitive machinery shared by q_seq_pack,
-    q_corpus_prep stage 5, and run_corpus_prep (review finding r8: two
-    hand-kept copies had to stay in sync or a fix to one would silently
-    miss the other).
+#: driver-sampled keys per prefix-sum range (the bounds only set balance)
+_SAMPLE_PER_RANGE = 64
 
-    `base` carries (group_col, *order_cols, toks, n); `narrow` the same
-    minus toks. The prefix sum runs on `narrow` ONLY — column pruning
-    must produce byte-identical range-exchange subtrees in the totals
-    and cumsum branches so ReusedExchange pins them to one physical
-    shuffle (see q_seq_pack's docstring for the full why)."""
+
+def _range_bounds(bounds_from: DataFrame, key: str, n_ranges: int) -> list:
+    """`n_ranges`-1 sorted split points of `key`, from a bounded,
+    deterministic driver sample of `bounds_from`: the K = 64·n_ranges
+    keys with the smallest xxhash64 (ties by key), one TakeOrdered
+    collect. The same frame yields the same bounds on every run."""
+    k = _SAMPLE_PER_RANGE * n_ranges
+    sample = sorted({r[0] for r in (bounds_from.select(key)
+                                    .filter(F.col(key).isNotNull())
+                                    .orderBy(F.xxhash64(key), key)
+                                    .limit(k).collect())})
+    if not sample:
+        return []
+    return sorted({sample[i * len(sample) // n_ranges]
+                   for i in range(1, n_ranges)})
+
+
+def _range_id(col: Column, bounds: list, lo: int = 0,
+              hi: int | None = None) -> Column:
+    """Number of `bounds` ≤ col (bisect_right) as a balanced F.when tree
+    over literal bounds: ~log2 P comparisons per row, and a pure
+    function of the row — no shuffle or partition id is involved."""
+    if hi is None:
+        hi = len(bounds)
+    if lo == hi:
+        return F.lit(lo)
+    mid = (lo + hi) // 2
+    return F.when(col < F.lit(bounds[mid]), _range_id(col, bounds, lo, mid)
+                  ).otherwise(_range_id(col, bounds, mid + 1, hi))
+
+
+def exclusive_prefix_sum(narrow: DataFrame, group_col: str, order_cols,
+                         *, bounds_from: DataFrame) -> DataFrame:
+    """Per-group exclusive running sum of `n` in `order_cols` order, as a
+    distributed two-level prefix sum — the ONE implementation behind
+    q_token_pack, q_seq_pack, q_corpus_prep stage 5 and run_corpus_prep.
+
+    `narrow` carries (group_col, *order_cols, n); the result is the same
+    rows plus `gstart`, the sum of `n` over the group's earlier rows.
+    Level 1: every row gets `_pid`, its range of the LEADING order key
+    among P-1 split points (P = defaultParallelism), and per-(_pid,
+    group) totals reduce to ≤ P×G tiny rows. Level 2: per-group
+    exclusive offsets by a window over those totals, broadcast back, plus
+    each row's local running sum in a window partitioned by (_pid, group)
+    — P×G concurrent sorts, never one global sort of the data.
+    offset[_pid] + local_before is exact wherever the split points land
+    (a row's _pid is monotone in its order key); they only set balance.
+
+    The split points are driver literals sampled from `bounds_from`
+    (a frame with the leading order key's column), so `_pid` is a pure
+    function of the row: the totals and cumsum branches agree on it
+    whether or not any exchange is reused, and with AQE on or off.
+    `bounds_from` must be a CHEAP frame — never downstream of extraction
+    or the ExactSubstr cut, which the sampling collect would run an
+    extra time at build time."""
     order_cols = list(order_cols)
-    n_parts = max(spark.sparkContext.defaultParallelism, 2)
-    parts = (narrow.repartitionByRange(n_parts, group_col, *order_cols)
-             .withColumn("_pid", F.spark_partition_id()))
-    if not (conf_true(spark, "spark.sql.exchange.reuse")
-            or conf_true(spark, "spark.sql.adaptive.enabled")):
-        # unreachable under default configs (both knobs default-on). The
-        # cache is intentionally NOT unpersist()ed here — the query is
-        # lazy and the blocks must outlive this builder; a caller that
-        # disables BOTH knobs owns the unpersist after its action.
-        parts = parts.persist()
+    n_ranges = max(narrow.sparkSession.sparkContext.defaultParallelism, 2)
+    key = order_cols[0]
+    bounds = _range_bounds(bounds_from, key, n_ranges)
+    parts = narrow.withColumn("_pid", _range_id(F.col(key), bounds))
     totals = parts.groupBy("_pid", group_col).agg(F.sum("n").alias("_tot"))
     w_off = (Window.partitionBy(group_col).orderBy("_pid")
              .rowsBetween(Window.unboundedPreceding, -1))
@@ -175,11 +210,31 @@ def pack_sequences(spark: SparkSession, base: DataFrame, narrow: DataFrame,
     w_local = (Window.partitionBy("_pid", group_col).orderBy(*order_cols)
                .rowsBetween(Window.unboundedPreceding, -1))
     local_before = F.coalesce(F.sum("n").over(w_local), F.lit(0))
-    starts = (parts.withColumn("_lb", local_before)
-              .join(F.broadcast(offsets), ["_pid", group_col])
-              .select(*order_cols, (F.col("_off") + F.col("_lb"))
-                      .cast("long").alias("gstart")))
-    g = base.join(starts, order_cols)
+    return (parts.withColumn("_lb", local_before)
+            .join(F.broadcast(offsets), ["_pid", group_col])
+            .select(group_col, *order_cols, "n",
+                    (F.col("_off") + F.col("_lb")).cast("long")
+                    .alias("gstart")))
+
+
+def pack_sequences(base: DataFrame, narrow: DataFrame, group_col: str,
+                   order_cols, seq_len: int, *,
+                   bounds_from: DataFrame) -> DataFrame:
+    """Fixed-length packing: each group's token arrays, concatenated in
+    `order_cols` order, are cut into `seq_len`-token sequences; emits
+    per-sequence token count and boundary tokens. Shared by q_seq_pack,
+    q_corpus_prep stage 5 and run_corpus_prep.
+
+    `base` carries (group_col, *order_cols, toks, n); `narrow` the same
+    minus toks — the prefix sum (exclusive_prefix_sum, which documents
+    `bounds_from`) runs on `narrow` only, so token arrays never ride
+    through its exchanges. Each row's global start offset then rejoins
+    its tokens on order_cols, explodes to the ~n/seq_len sequences it
+    overlaps, and a hash agg on (group, seq_idx) sums them."""
+    order_cols = list(order_cols)
+    starts = exclusive_prefix_sum(narrow, group_col, order_cols,
+                                  bounds_from=bounds_from)
+    g = base.join(starts.select(*order_cols, "gstart"), order_cols)
     s0 = F.floor(F.col("gstart") / seq_len)
     s1 = F.floor((F.col("gstart") + F.col("n") - 1) / seq_len)
     spans = (g.select(group_col, "toks", "n", "gstart",

@@ -68,7 +68,9 @@ Stage shapes (the 100-TB audit):
      shuffle as rows. Packing reads the MATERIALIZED survivors parquet,
      so unlike the single-query form (which leans on AQE ReusedExchange
      to collapse its three lineage branches onto one extraction pass)
-     no stage is ever recomputed across branches by construction.
+     no stage is ever recomputed across branches by construction. Its
+     range split points are sampled from the raw input scan's turn-0
+     rows (one per conv_id), never from the survivors or the cut text.
 
 The survivor/packed sinks inherit the chain's determinism: reruns with
 the same config byte-reproduce them (modulo parquet file split layout),
@@ -87,7 +89,7 @@ from ..schema import EXTRACTED_SCHEMA
 from .corpus_ops import (corpus_gate_pred, exact_substr_spans,
                          pack_sequences, tokens_expr, zip_grams)
 from .extract_job import (DEFAULT_N_BUCKETS, DEFAULT_SALT_SPAN, _ManifestIO,
-                          build_session, run_extract)
+                          build_session, read_transcripts, run_extract)
 
 _SURVIVOR_COLS = ("role", "conv_id", "turn_idx", "text",
                   "is_keeper", "near_dup", "contaminated")
@@ -243,8 +245,10 @@ def run_corpus_prep(spark: SparkSession, input_path: str, output_path: str,
                 .select("role", "conv_id", "turn_idx", "toks", "n"))
         narrow = clean.select("role", "conv_id", "turn_idx",
                               F.size(toks).cast("long").alias("n"))
-        packed = pack_sequences(spark, base, narrow, "role",
-                                ["conv_id", "turn_idx"], seq_len)
+        packed = pack_sequences(
+            base, narrow, "role", ["conv_id", "turn_idx"], seq_len,
+            bounds_from=read_transcripts(spark, input_path)
+            .filter(F.col("turn_idx") == 0).select("conv_id"))
         packed.write.mode("overwrite").parquet(out + "/packed")
         pstats = (spark.read.parquet(out + "/packed")
                   .agg(F.count("*").alias("n_sequences"),

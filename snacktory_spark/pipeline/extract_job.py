@@ -386,12 +386,12 @@ def extracted_dedup_df(df: DataFrame, n_buckets: int = DEFAULT_N_BUCKETS,
     Worth it when the duplicate ratio is high (templated pages, retried
     tool turns, crawl re-fetches): UDF cost scales with DISTINCT texts,
     while the added cost is one dropDuplicates shuffle of (hash, text) and
-    one hash-join on a 32-char key. Output schema and content match
-    extracted_df row for row (per-row input_file/input_bytes lineage is
-    preserved from the original scan; `lineage=False` skips the
-    input_file capture and emits NULL, mirroring extracted_df's flag);
-    work distribution is by content hash — uniform by construction, so
-    no conversation-length skew."""
+    one hash-join on a 64-char sha256 key. Output schema and content
+    match extracted_df row for row (input_bytes is always derived from
+    the original text; input_file is captured only with lineage=True,
+    NULL otherwise, mirroring extracted_df); work distribution is by
+    content hash — uniform by construction, so no conversation-length
+    skew."""
     from ..udf import extract_distinct_map_in_pandas
     from ..schema import EXTRACT_SCHEMA
 

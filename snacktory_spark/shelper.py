@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import datetime as _dt
 import re
-from urllib.parse import quote, unquote_plus, urljoin
+from urllib.parse import unquote_plus, urljoin
 
 UTC = _dt.timezone.utc
 
@@ -246,10 +246,6 @@ def get_url_from_ugly_facebook_redirect(url: str) -> str | None:
     if url.startswith("http://www.facebook.com/l.php?u="):
         return url_decode(url[len("http://www.facebook.com/l.php?u="):])
     return None
-
-
-def url_encode(s: str) -> str:
-    return quote(s, safe="")
 
 
 def url_decode(s: str) -> str:

@@ -60,12 +60,6 @@ def shingles_col(text_col="text", k: int = SHINGLE_WORDS):
             .otherwise(F.array(F.concat_ws(" ", toks)))
 
 
-def _salted_min(sh, salt: str):
-    # NB: close over `salt`; a default-arg lambda would be mis-parsed by
-    # pyspark's higher-order-function arity detection as an (x, index) lambda
-    return F.array_min(F.transform(sh, lambda x: F.md5(F.concat(F.lit(salt), x))))
-
-
 def minhash_signature(text_col="text", n_hashes: int = N_MINHASH,
                       k: int = SHINGLE_WORDS):
     """Array of n lexicographic-min md5(salt||shingle) values.
