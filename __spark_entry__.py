@@ -107,38 +107,34 @@ def _split_scan(spark: SparkSession, path: str, key: str | None = None) -> DataF
     aggregates, map-side join+sort) runs on 1-2 tasks while the other 30
     cores idle (measured: the sf1.0 top_orders map stage ran 7 tasks of
     which 2 carried all rows; decontaminate's 2.4M-window enumeration ran
-    on ONE). When the input is provably cheap to redistribute (local file
-    smaller than defaultParallelism × maxPartitionBytes) and genuinely
-    under-split (fewer row groups than cores), shuffle it once to P
-    partitions — hash-keyed when `key` is given, so a downstream
-    aggregation on the same key reuses the clustering and needs no second
-    exchange. Large inputs are naturally split and pass through
+    on ONE). When the input is provably cheap to redistribute (less than
+    one cluster-wide round of max-size scan splits, extract_job.scan_rounds)
+    and genuinely under-split (fewer parquet row groups than cores), shuffle
+    it once to P partitions — hash-keyed when `key` is given, so a
+    downstream aggregation on the same key reuses the clustering and needs
+    no second exchange. Large inputs are naturally split and pass through
     untouched, so the rule is scale-adaptive: at 100 TB this is a no-op.
+    Remote files pass through too (their footers are not read here); a
+    local footer that cannot be read raises.
     """
+    from urllib.parse import unquote, urlparse
+
+    import pyarrow.parquet as _pq
+    from pyspark.sql import functions as F
+    from snacktory_spark.pipeline.extract_job import scan_rounds
+
     df = spark.read.parquet(path)
-    try:
-        if not _os.path.exists(path):      # remote/scheme'd path: untouched
-            return df
-        p = spark.sparkContext.defaultParallelism
-        max_bytes = int(spark.conf.get("spark.sql.files.maxPartitionBytes",
-                                       "134217728").rstrip("b"))
-        size = _os.path.getsize(path) if _os.path.isfile(path) else sum(
-            _os.path.getsize(_os.path.join(path, f))
-            for f in _os.listdir(path) if f.endswith(".parquet"))
-        if size >= p * max_bytes:
-            return df
-        import pyarrow.parquet as _pq
-        if _os.path.isfile(path):
-            groups = _pq.ParquetFile(path).num_row_groups
-        else:
-            groups = sum(_pq.ParquetFile(_os.path.join(path, f)).num_row_groups
-                         for f in _os.listdir(path) if f.endswith(".parquet"))
-        if groups >= p:
-            return df
-        from pyspark.sql import functions as F
-        return df.repartition(p, F.col(key)) if key else df.repartition(p)
-    except Exception:
+    if scan_rounds(df) >= 1:
         return df
+    files = [urlparse(f) for f in df.inputFiles()]
+    if any(f.scheme != "file" for f in files):
+        return df
+    p = spark.sparkContext.defaultParallelism
+    groups = sum(_pq.ParquetFile(unquote(f.path)).num_row_groups
+                 for f in files)
+    if groups >= p:
+        return df
+    return df.repartition(p, F.col(key)) if key else df.repartition(p)
 
 
 def _oracle_projection(out: "DataFrame"):

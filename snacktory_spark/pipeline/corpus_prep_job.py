@@ -30,7 +30,8 @@ first — a killed job resumes from the last committed level):
     <out>/extracted/   bucket=N parquet + per-bucket _manifest/ — the
                        expensive stage, delegated to run_extract's
                        per-bucket manifest + anti-join resume (waves
-                       bound the in-flight loss; see extract_job.py)
+                       sized from the input's bytes bound the in-flight
+                       loss; see extract_job.py)
     <out>/survivors/   every quality-gate survivor annotated with its
                        is_keeper (exact-dedup election) and contaminated
                        (benchmark 8-gram overlap) decisions — the
@@ -81,23 +82,16 @@ from __future__ import annotations
 
 import json
 
-from pyspark.errors.exceptions.captured import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
-from pyspark.sql.types import IntegerType, StructField, StructType
 
-from ..schema import EXTRACTED_SCHEMA
 from .corpus_ops import (corpus_gate_pred, exact_substr_spans,
                          pack_sequences, tokens_expr, zip_grams)
 from .extract_job import (DEFAULT_N_BUCKETS, DEFAULT_SALT_SPAN, _ManifestIO,
-                          build_session, read_transcripts, run_extract)
+                          build_session, read_extracted, read_transcripts,
+                          run_extract)
 
 _SURVIVOR_COLS = ("role", "conv_id", "turn_idx", "text",
                   "is_keeper", "near_dup", "contaminated")
-
-
-def _extracted_schema() -> StructType:
-    return StructType(list(EXTRACTED_SCHEMA.fields)
-                      + [StructField("bucket", IntegerType(), True)])
 
 
 def _bench_fingerprint(bench: DataFrame | None) -> dict | None:
@@ -121,7 +115,6 @@ def run_corpus_prep(spark: SparkSession, input_path: str, output_path: str,
                     salt_span: int = DEFAULT_SALT_SPAN,
                     partitions: int | None = None,
                     resume: bool = True,
-                    bucket_batch: int | None = None,
                     files_per_bucket: int | None = None,
                     dedup_texts: bool = False,
                     near_dedup_jaccard: float | None = None,
@@ -153,7 +146,6 @@ def run_corpus_prep(spark: SparkSession, input_path: str, output_path: str,
     ex = run_extract(spark, input_path, out + "/extracted",
                      n_buckets=n_buckets, salt_span=salt_span,
                      partitions=partitions, resume=resume,
-                     bucket_batch=bucket_batch,
                      files_per_bucket=files_per_bucket,
                      dedup_texts=dedup_texts)
 
@@ -280,19 +272,11 @@ def _survivor_flags(spark: SparkSession, out: str, bench: DataFrame | None,
     keepers is semantics-preserving: the flag depends only on the row's
     text, and q_corpus_prep's post-dedup filter removes exactly the
     keepers whose text is contaminated — the same final set."""
-    try:
-        extracted = (spark.read.schema(_extracted_schema())
-                     .parquet(out + "/extracted"))
-    except AnalysisException as e:
-        # ONLY the documented all-empty-input case (manifests written,
-        # no data files → no directory) may substitute an empty frame;
-        # any other read failure (corrupt files, transient FS errors)
-        # must FAIL the job — swallowing it would certify empty
-        # survivors/packed sinks that every resume then skips forward
-        # (r9 review finding)
-        if "PATH_NOT_FOUND" not in str(e):
-            raise
-        extracted = spark.createDataFrame([], _extracted_schema())
+    # stage 1 always leaves the directory (its write creates it, and its
+    # manifests live inside it), so a read failure here is real and must
+    # fail the job: swallowing it would certify empty survivors/packed
+    # sinks that every resume then skips forward
+    extracted = read_extracted(spark, out + "/extracted")
 
     toks = tokens_expr()
     gated = (extracted
@@ -394,7 +378,6 @@ def main(argv=None) -> None:
     p.add_argument("--gram-width", type=int, default=8)
     p.add_argument("--salt-span", type=int, default=DEFAULT_SALT_SPAN)
     p.add_argument("--partitions", type=int, default=None)
-    p.add_argument("--bucket-batch", type=int, default=None)
     p.add_argument("--files-per-bucket", type=int, default=None)
     p.add_argument("--dedup-texts", action="store_true",
                    help="extract each distinct text once (result-cache "
@@ -424,7 +407,7 @@ def main(argv=None) -> None:
         n_buckets=args.buckets, seq_len=args.seq_len,
         bench_grams_path=args.bench_grams, gram_width=args.gram_width,
         salt_span=args.salt_span, partitions=args.partitions,
-        resume=not args.no_resume, bucket_batch=args.bucket_batch,
+        resume=not args.no_resume,
         files_per_bucket=args.files_per_bucket,
         dedup_texts=args.dedup_texts,
         near_dedup_jaccard=args.near_dedup_jaccard,

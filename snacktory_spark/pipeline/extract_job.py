@@ -19,8 +19,18 @@ under <out>/_manifest/. A resumed run anti-joins input buckets against the
 manifest and only processes missing buckets; partitionOverwriteMode=dynamic
 makes per-bucket output overwrites idempotent.
 
+Waves: the missing buckets run in up to MAX_WAVES waves, each written and
+manifested before the next starts. The count is worked out from the input,
+not set by the caller: the missing share of the input's plan bytes over one
+cluster-wide round of max-size scan splits (defaultParallelism ×
+spark.sql.files.maxPartitionBytes), rounded up. Every wave re-scans the
+whole input (the bucket filter is on a hash and cannot reach parquet) and
+starts its own Python tasks, so an input that one round of splits covers
+runs as ONE wave; a larger one keeps the cap, and a kill loses at most a
+MAX_WAVES-th of the run.
+
 At 100 TB: buckets bound the blast radius of a failure (a killed job loses
-at most the in-flight buckets), the manifest is tiny driver-side state, and
+at most the in-flight wave), the manifest is tiny driver-side state, and
 resume is an O(buckets) filter, not a table diff.
 """
 
@@ -28,18 +38,24 @@ from __future__ import annotations
 
 import json
 import logging
+import math
 import os
 import re
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
-from ..schema import TRANSCRIPT_SCHEMA
+from ..schema import EXTRACTED_SCHEMA, TRANSCRIPT_SCHEMA
 from ..udf import extract_map_in_pandas
-from ..schema import EXTRACTED_SCHEMA
 
 DEFAULT_SALT_SPAN = 64      # turns of one conv kept together per salt unit
 DEFAULT_N_BUCKETS = 64      # output commit granularity
+MAX_WAVES = 4               # a kill loses at most a quarter of the run
+
+# the written extract table: EXTRACTED_SCHEMA + the bucket partition column
+_WRITTEN_SCHEMA = StructType(list(EXTRACTED_SCHEMA.fields)
+                             + [StructField("bucket", IntegerType(), True)])
 
 
 def ensure_py_files(spark: SparkSession) -> None:
@@ -126,6 +142,26 @@ def read_transcripts(spark: SparkSession, path: str) -> DataFrame:
     if "/" not in path and "." in path:
         return spark.table(path)  # iceberg/catalog identifier
     return spark.read.schema(TRANSCRIPT_SCHEMA).parquet(path)
+
+
+def read_extracted(spark: SparkSession, path: str) -> DataFrame:
+    """The extract table run_extract wrote at `path`. The schema is
+    explicit: a run whose buckets are all empty writes no data files, and
+    schema inference over none would fail. The write always creates
+    `path`, so every read error is a real one and propagates."""
+    return spark.read.schema(_WRITTEN_SCHEMA).parquet(path)
+
+
+def scan_rounds(df: DataFrame) -> float:
+    """How many cluster-wide rounds of max-size scan splits `df`'s input
+    fills: its plan's sizeInBytes over defaultParallelism ×
+    spark.sql.files.maxPartitionBytes. For an unfiltered parquet scan the
+    plan size is the on-disk size; reading it runs no Spark job. A source
+    that reports no size (Long.MaxValue) reads as very large."""
+    spark = df.sparkSession
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    return size / (spark.sparkContext.defaultParallelism * split)
 
 
 def manifest_dir(output_path: str) -> str:
@@ -436,16 +472,18 @@ def run_extract(spark: SparkSession, input_path: str, output_path: str,
                 salt_span: int = DEFAULT_SALT_SPAN,
                 partitions: int | None = None,
                 resume: bool = True,
-                bucket_batch: int | None = None,
                 files_per_bucket: int | None = None,
                 dedup_texts: bool = False) -> dict:
     """Run (or resume) the extraction job. Returns run metrics.
 
-    Buckets are processed in WAVES of `bucket_batch` (default: quarter of
-    the missing buckets, min 8): each wave is written + manifested before
-    the next starts, so a killed job loses at most one in-flight wave and a
-    resume skips every committed bucket. At 100 TB this is the knob that
-    bounds the blast radius of a failure.
+    The missing buckets are processed in WAVES: each wave is written +
+    manifested before the next starts, so a killed job loses at most one
+    in-flight wave and a resume skips every committed bucket. The wave
+    count is ceil(missing share of the input bytes / (defaultParallelism ×
+    spark.sql.files.maxPartitionBytes)), clamped to [1, MAX_WAVES]: each
+    wave re-scans the input and starts its own Python tasks, so a small
+    input runs as one wave, while a large one (or one of unknown size)
+    keeps MAX_WAVES waves to bound the blast radius of a failure.
 
     The input text column is scanned exactly ONCE per wave (the extract
     pass itself); with dedup_texts=True it is read twice (hash side +
@@ -481,13 +519,13 @@ def run_extract(spark: SparkSession, input_path: str, output_path: str,
     try:
         return _run_extract_waves(
             spark, input_path, output_path, n_buckets, salt_span,
-            partitions, resume, bucket_batch, files_per_bucket, dedup_texts)
+            partitions, resume, files_per_bucket, dedup_texts)
     finally:
         spark.conf.set(_MODE_KEY, prev_mode or "static")
 
 
 def _run_extract_waves(spark, input_path, output_path, n_buckets, salt_span,
-                       partitions, resume, bucket_batch, files_per_bucket,
+                       partitions, resume, files_per_bucket,
                        dedup_texts) -> dict:
     df_all = read_transcripts(spark, input_path)
 
@@ -504,8 +542,12 @@ def _run_extract_waves(spark, input_path, output_path, n_buckets, salt_span,
     if not missing:
         return {"skipped": True, "completed_buckets": len(done),
                 "stale_buckets_removed": len(stale)}
-    if bucket_batch is None:
-        bucket_batch = max(8, len(missing) // 4)
+    # uniform bucket hashing: the missing buckets hold their share of bytes
+    n_waves = max(1, min(MAX_WAVES, len(missing), math.ceil(
+        scan_rounds(df_all) * len(missing) / n_buckets)))
+    waves = [missing[len(missing) * i // n_waves:
+                     len(missing) * (i + 1) // n_waves]
+             for i in range(n_waves)]
 
     df_all = df_all.withColumn(
         "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int"))
@@ -515,8 +557,7 @@ def _run_extract_waves(spark, input_path, output_path, n_buckets, salt_span,
               "resumed_buckets_skipped": len(done), "waves": 0,
               "stale_buckets_removed": len(stale)}
 
-    for w in range(0, len(missing), bucket_batch):
-        wave = missing[w:w + bucket_batch]
+    for wave in waves:
         df = df_all.filter(F.col("bucket").isin(wave))
         if dedup_texts:
             out = extracted_dedup_df(df.drop("bucket"), n_buckets=n_buckets,
@@ -544,19 +585,9 @@ def _run_extract_waves(spark, input_path, output_path, n_buckets, salt_span,
         # per-bucket manifest (rows/bytes/lineage) from ONE column-pruned
         # scan of this wave's written bucket dirs — neither the input nor
         # the extracted text column is re-read (byte sizes are UDF-emitted).
-        # EXPLICIT schema: a fully-empty wave writes no data files and
-        # schema inference would fail (empty-input robustness)
-        from pyspark.sql.types import IntegerType, StructField, StructType
-        written_schema = StructType(
-            list(EXTRACTED_SCHEMA.fields)
-            + [StructField("bucket", IntegerType(), True)])
-        try:
-            written = (spark.read.schema(written_schema).parquet(output_path)
-                       .filter(F.col("bucket").isin(wave)))
-            rows_ok = True
-        except Exception:
-            rows_ok = False  # nothing ever written (e.g. empty input)
-        rows = [] if not rows_ok else (written.groupBy("bucket")
+        rows = (read_extracted(spark, output_path)
+                .filter(F.col("bucket").isin(wave))
+                .groupBy("bucket")
                 .agg(F.count("*").alias("output_rows"),
                      F.sum("output_bytes").alias("output_bytes"),
                      F.sum("input_bytes").alias("input_bytes"),

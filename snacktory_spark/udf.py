@@ -1,7 +1,7 @@
 """Arrow-vectorized extraction UDFs (SURVEY.md §1.2, §3 EP1 Spark mapping).
 
 The whole reference library is one scalar ``String html → JResult`` function;
-here it becomes a single vectorized pandas UDF / mapInPandas stage: Arrow
+here it becomes a single vectorized mapInPandas stage: Arrow
 batch in → per-row pure-python extraction (module-level compiled regex/rule
 tables, warm per worker like the reference's static Patterns) → Arrow batch
 out. No per-row Python dispatch from the JVM.
@@ -67,34 +67,12 @@ def _results_to_frame(results: list[dict]) -> pd.DataFrame:
     return frame
 
 
-def extract_batch(text: pd.Series, url: pd.Series | None = None) -> pd.DataFrame:
-    """Vectorized batch extraction: two Series in, struct-frame out."""
-    if url is None:
-        url = pd.Series([""] * len(text))
-    results = [extract_row(t, u) for t, u in zip(text, url)]
-    return _results_to_frame(results)
-
-
-def make_extract_udf():
-    """Scalar Arrow-vectorized UDF returning the EXTRACT_SCHEMA struct.
-
-    Usage: df.withColumn("res", extract_udf(col("text"), col("url")))
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(EXTRACT_SCHEMA)
-    def extract_udf(text: pd.Series, url: pd.Series) -> pd.DataFrame:
-        return extract_batch(text, url)
-
-    return extract_udf
-
-
 def extract_map_in_pandas(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """mapInPandas stage: transcript batches → flat extracted batches.
 
     Expects columns conv_id, turn_idx, role, tool, ts, text (and optionally
-    url). Emits EXTRACTED_SCHEMA-shaped batches. Used by the pipeline for
-    fuller control over batch shape than the scalar UDF.
+    url). Emits EXTRACTED_SCHEMA-shaped batches: the key columns, the
+    extraction result and the lineage columns, one row per input row.
     """
     for pdf in iterator:
         url = pdf["url"] if "url" in pdf.columns else pd.Series([""] * len(pdf))

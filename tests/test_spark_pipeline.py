@@ -192,36 +192,25 @@ def test_run_extract_restores_overwrite_mode(spark, synth_dir, tmp_path):
         spark.conf.unset(key)
 
 
-def test_extract_udf_scalar(spark):
-    """Scalar pandas UDF path (withColumn style)."""
-    from pyspark.sql import functions as F
-    from snacktory_spark.udf import make_extract_udf
+def test_extract_row_error_contract(monkeypatch):
+    """A row that cannot be extracted yields extract_ok=False with the
+    reason in extract_error, never an exception: null and empty text, and
+    an input the extractor raises on."""
+    import snacktory_spark.udf as udf
 
-    html = ("<html><head><title>T1</title></head><body><div class='article-body'>"
-            + "".join(f"<p>Paragraph number {i} with plenty of meaningful text "
-                      f"for the extractor to keep in its output body.</p>"
-                      for i in range(4))
-            + "</div></body></html>")
-    df = spark.createDataFrame([("c1", 0, html, "")],
-                               "conv_id string, turn_idx int, text string, url string")
-    udf = make_extract_udf()
-    row = df.withColumn("res", udf(F.col("text"), F.col("url"))).select("res.*").first()
-    assert row["title"] == "T1"
-    assert row["text"].startswith("Paragraph number 0")
-    assert row["extract_ok"] is True
+    def boom(text, url):
+        raise ValueError("bad page")
+
+    monkeypatch.setattr(udf, "extract", boom)
+    for text in (None, "", "<p>raises</p>"):
+        res = udf.extract_row(text, None)
+        assert res["extract_ok"] is False
+        assert res["extract_error"]
+    assert res["extract_error"] == "ValueError: bad page"
 
 
-def test_extract_udf_error_row(spark):
-    from pyspark.sql import functions as F
-    from snacktory_spark.udf import make_extract_udf
-    df = spark.createDataFrame([("c1", 0, None, ""), ("c1", 1, "", "")],
-                               "conv_id string, turn_idx int, text string, url string")
-    udf = make_extract_udf()
-    rows = df.withColumn("res", udf(F.col("text"), F.col("url"))).select("res.extract_ok").collect()
-    assert all(r["extract_ok"] is False for r in rows)
-
-
-def test_kill_mid_job_resume_completes(spark, synth_dir, tmp_path):
+def test_kill_mid_job_resume_completes(spark, synth_dir, tmp_path,
+                                      monkeypatch):
     """North-rule contract: a job killed between waves resumes idempotently.
     Simulated by making the manifest writer blow up after the first wave;
     the resumed run processes only the missing buckets and the final output
@@ -240,23 +229,41 @@ def test_kill_mid_job_resume_completes(spark, synth_dir, tmp_path):
         wrote["n"] += 1
         real_write(self, rec)
 
-    ej._ManifestIO.write_atomic = dying_write
+    real_extracted_df = ej.extracted_df
+    planned = {"waves": 0}
+
+    def counting_extracted_df(*args, **kwargs):
+        planned["waves"] += 1
+        return real_extracted_df(*args, **kwargs)
+
+    # small scan splits make the ~0.7 MB input span several rounds of
+    # splits, so the run is cut into several waves
+    key = "spark.sql.files.maxPartitionBytes"
+    prev_split = spark.conf.get(key)
+    spark.conf.set(key, "16k")
     try:
-        with pytest.raises(RuntimeError, match="simulated kill"):
-            ej.run_extract(spark, src, out, n_buckets=8, bucket_batch=2)
+        with monkeypatch.context() as mp:
+            mp.setattr(ej._ManifestIO, "write_atomic", dying_write)
+            mp.setattr(ej, "extracted_df", counting_extracted_df)
+            with pytest.raises(RuntimeError, match="simulated kill"):
+                ej.run_extract(spark, src, out, n_buckets=8)
+        assert planned["waves"] > 1  # the kill came after a committed wave
+
+        done_before = ej.load_manifest(out, expect_input_path=src,
+                                       expect_n_buckets=8)
+        assert 0 < len(done_before) < 8  # partial progress survived the kill
+
+        m = ej.run_extract(spark, src, out, n_buckets=8)
+        assert 1 < m["waves"] <= 4
     finally:
-        ej._ManifestIO.write_atomic = real_write
-
-    done_before = ej.load_manifest(out, expect_input_path=src, expect_n_buckets=8)
-    assert 0 < len(done_before) < 8  # partial progress survived the kill
-
-    m = ej.run_extract(spark, src, out, n_buckets=8, bucket_batch=2)
+        spark.conf.set(key, prev_split)
     assert m["resumed_buckets_skipped"] == len(done_before)
     assert len(ej.load_manifest(out)) == 8
 
-    # resumed output == uninterrupted run on a fresh dir
+    # resumed output == uninterrupted run on a fresh dir; at the default
+    # split size and 64 buckets the small input runs as one wave
     clean = str(tmp_path / "out_clean")
-    ej.run_extract(spark, src, clean, n_buckets=8)
+    assert ej.run_extract(spark, src, clean)["waves"] == 1
     a = spark.read.parquet(out).select("conv_id", "turn_idx", "text")
     b = spark.read.parquet(clean).select("conv_id", "turn_idx", "text")
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
@@ -452,6 +459,30 @@ def test_empty_input_completes_and_resumes(spark, tmp_path):
     assert m["output_rows"] == 0 and m["waves"] == 1
     assert len(load_manifest(out)) == 4  # empty buckets are complete too
     assert run_extract(spark, src, out, n_buckets=4).get("skipped") is True
+
+
+def test_manifest_read_failure_fails_the_run(spark, synth_dir, tmp_path,
+                                             monkeypatch):
+    """A failed read of the written output must fail the run and write no
+    manifest: certifying the wave's buckets as empty would make every
+    resume skip them for good."""
+    from pyspark.errors import AnalysisException
+    from pyspark.sql.readwriter import DataFrameReader
+    from snacktory_spark.pipeline.extract_job import load_manifest, run_extract
+
+    out = str(tmp_path / "out_unreadable")
+    real_parquet = DataFrameReader.parquet
+
+    def failing_parquet(self, *paths, **options):
+        if out in paths:
+            raise AnalysisException("simulated listing failure")
+        return real_parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", failing_parquet)
+    with pytest.raises(AnalysisException, match="simulated listing failure"):
+        run_extract(spark, f"{synth_dir}/transcripts.parquet", out,
+                    n_buckets=4, resume=False)
+    assert load_manifest(out) == {}
 
 
 def test_dedup_and_compaction_compose(spark, synth_dir, tmp_path):
