@@ -345,14 +345,14 @@ def q_event_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window, functions as F
     events = spark.read.parquet(f"{sf_dir}/events.parquet")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = (F.unix_timestamp("ts")
-           - F.unix_timestamp(F.lag("ts", 1).over(w))) > 1800
-    with_flag = events.withColumn(
-        "new_session", F.when(gap | F.lag("ts", 1).over(w).isNull(), 1).otherwise(0))
+    # one lag column: a lag Column used twice is two window expressions
+    prev = F.col("prev_ts")
+    gap = (F.unix_timestamp("ts") - F.unix_timestamp(prev)) > 1800
+    with_flag = events.withColumn("prev_ts", F.lag("ts", 1).over(w)).withColumn(
+        "new_session", F.when(gap | prev.isNull(), 1).otherwise(0))
     sess = with_flag.withColumn(
         "session_no", F.sum("new_session").over(
-            Window.partitionBy("user_id").orderBy("ts", "event_id")
-            .rowsBetween(Window.unboundedPreceding, 0)))
+            w.rowsBetween(Window.unboundedPreceding, 0)))
     return (sess.groupBy("user_id", "session_no")
             .agg(F.count("*").alias("n_events"),
                  F.round(F.sum("value"), 2).alias("sum_value")))

@@ -1,7 +1,7 @@
 """Dump the physical plans of the headline queries to BENCH/PLANS.md —
 the '.explain and iterate until it's the plan you want' evidence:
 pushed filters/pruned schemas at the scan, broadcast joins for small dims,
-exactly one exchange in the extraction pipeline."""
+exactly one exchange in the extraction query (extracted_df)."""
 
 from __future__ import annotations
 

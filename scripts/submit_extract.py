@@ -16,6 +16,10 @@ Local smoke:
         --input /root/repo/data/synth/sf0.001/transcripts.parquet \
         --output /tmp/extract_out
 
+--partitions (default 2 × default parallelism) is the width of the UDF and
+write stages; a bucket dir gets at most ceil(partitions / buckets in a wave)
+files per wave, rows in (conv_id, turn_idx) order.
+
 The job is idempotently resumable: rerunning after a kill reprocesses only
 buckets missing from <output>/_manifest (see pipeline/extract_job.py).
 --output may be a scheme'd URI (file:, hdfs://, s3a://...): manifest I/O
@@ -39,9 +43,6 @@ def main(argv=None):
     p.add_argument("--salt-span", type=int, default=64)
     p.add_argument("--partitions", type=int, default=None)
     p.add_argument("--no-resume", action="store_true")
-    p.add_argument("--files-per-bucket", type=int, default=None,
-                   help="bound sink file count per bucket (adds one exchange "
-                        "+ stable (conv_id, turn_idx) in-file ordering)")
     args = p.parse_args(argv)
 
     try:
@@ -54,8 +55,7 @@ def main(argv=None):
     metrics = run_extract(
         spark, args.input, args.output,
         n_buckets=args.buckets, salt_span=args.salt_span,
-        partitions=args.partitions, resume=not args.no_resume,
-        files_per_bucket=args.files_per_bucket)
+        partitions=args.partitions, resume=not args.no_resume)
     print(json.dumps(metrics))
     spark.stop()
 

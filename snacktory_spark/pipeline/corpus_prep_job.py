@@ -115,7 +115,6 @@ def run_corpus_prep(spark: SparkSession, input_path: str, output_path: str,
                     salt_span: int = DEFAULT_SALT_SPAN,
                     partitions: int | None = None,
                     resume: bool = True,
-                    files_per_bucket: int | None = None,
                     dedup_texts: bool = False,
                     near_dedup_jaccard: float | None = None,
                     exact_substr_window: int | None = None,
@@ -146,7 +145,6 @@ def run_corpus_prep(spark: SparkSession, input_path: str, output_path: str,
     ex = run_extract(spark, input_path, out + "/extracted",
                      n_buckets=n_buckets, salt_span=salt_span,
                      partitions=partitions, resume=resume,
-                     files_per_bucket=files_per_bucket,
                      dedup_texts=dedup_texts)
 
     bench = None
@@ -378,7 +376,6 @@ def main(argv=None) -> None:
     p.add_argument("--gram-width", type=int, default=8)
     p.add_argument("--salt-span", type=int, default=DEFAULT_SALT_SPAN)
     p.add_argument("--partitions", type=int, default=None)
-    p.add_argument("--files-per-bucket", type=int, default=None)
     p.add_argument("--dedup-texts", action="store_true",
                    help="extract each distinct text once (result-cache "
                         "shape; worth it on high-duplicate corpora)")
@@ -408,7 +405,6 @@ def main(argv=None) -> None:
         bench_grams_path=args.bench_grams, gram_width=args.gram_width,
         salt_span=args.salt_span, partitions=args.partitions,
         resume=not args.no_resume,
-        files_per_bucket=args.files_per_bucket,
         dedup_texts=args.dedup_texts,
         near_dedup_jaccard=args.near_dedup_jaccard,
         exact_substr_window=args.exact_substr_window,

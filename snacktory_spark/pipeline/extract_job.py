@@ -1,17 +1,27 @@
 """The distributed extraction pipeline (SURVEY.md §2.6, §4).
 
 Plan shape (deliberately narrow — scan → filter → salted exchange → Arrow
-UDF map → write; the ONLY shuffle is the explicit salted repartition):
+UDF map → bucket exchange → write; two shuffles, one each side of the UDF):
 
   read parquet/iceberg (explicit schema, predicate pushdown + column pruning
       reach the scan — we select only the needed columns)
   → filter(text IS NOT NULL AND length(text) > 0)   [cheap JVM-side gate]
-  → repartition(P, xxhash64(conv_id, turn_idx DIV SALT_SPAN))
+  → repartition(n, xxhash64(conv_id, turn_idx DIV SALT_SPAN))
       conv_id-hash salting: turns of one mega-conversation spread over
       ceil(len/SALT_SPAN) partitions — defuses long-conversation skew while
       keeping SALT_SPAN-turn runs co-located (north-star requirement)
   → mapInPandas(extract)        [Arrow-vectorized, no per-row Python]
+  → repartition(n, bucket, file-salt) + sortWithinPartitions(bucket,
+      conv_id, turn_idx)        [run_extract only; see the sink rule below]
   → write parquet partitioned by bucket = pmod(xxhash64(conv_id), N_BUCKETS)
+
+Sink rule: every file costs a create/commit (an object on a cluster, a
+forked chmod on a local filesystem without libhadoop), so a wave writes
+about max(buckets in the wave, n) files, never n × buckets: k = ceil(n /
+buckets in the wave) file salts per bucket, hashed from conv_id under their
+own seed (reusing the bucket hash collapses k when gcd(k, N_BUCKETS) > 1).
+Keying the UDF's exchange by bucket instead would put a mega-conversation
+into one Python task.
 
 Checkpoint/resume: after a successful write the job derives a per-bucket
 manifest (rows/bytes/ok/error counts) from the written data and stores it
@@ -377,6 +387,13 @@ def load_manifest(output_path: str, spark: SparkSession | None = None,
     return out
 
 
+def udf_partitions(spark: SparkSession, partitions: int | None = None) -> int:
+    """The UDF stage's partition count, `partitions` or 2 × defaultParallelism;
+    explicit, since AQE would coalesce it by shuffle bytes and starve the
+    CPU-heavy UDF stage."""
+    return partitions or 2 * spark.sparkContext.defaultParallelism
+
+
 def extracted_df(df: DataFrame, n_buckets: int = DEFAULT_N_BUCKETS,
                  salt_span: int = DEFAULT_SALT_SPAN,
                  partitions: int | None = None,
@@ -402,11 +419,8 @@ def extracted_df(df: DataFrame, n_buckets: int = DEFAULT_N_BUCKETS,
         gated = gated.withColumn("input_file", F.input_file_name())
     salt = F.xxhash64(F.col("conv_id"),
                       (F.col("turn_idx") / F.lit(salt_span)).cast("long"))
-    if not partitions:
-        # explicit count: AQE would coalesce this exchange by shuffle-byte
-        # size, which starves the CPU-heavy UDF stage of parallelism
-        partitions = df.sparkSession.sparkContext.defaultParallelism * 2
-    salted = gated.repartition(partitions, salt)
+    salted = gated.repartition(udf_partitions(df.sparkSession, partitions),
+                               salt)
     out = salted.mapInPandas(extract_map_in_pandas, schema=EXTRACTED_SCHEMA)
     return out.withColumn(
         "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int"))
@@ -444,11 +458,9 @@ def extracted_dedup_df(df: DataFrame, n_buckets: int = DEFAULT_N_BUCKETS,
               .withColumn("h", F.sha2(F.col("text"), 256))
               # utf-8 input size per row, captured before text is dropped
               .withColumn("input_bytes", F.octet_length("text").cast("long")))
-    if not partitions:
-        partitions = df.sparkSession.sparkContext.defaultParallelism * 2
     distinct = (hashed.select("h", "text")
                 .dropDuplicates(["h"])
-                .repartition(partitions, "h"))
+                .repartition(udf_partitions(df.sparkSession, partitions), "h"))
     res_schema = ("h string, "
                   + ", ".join(f"{f.name} {f.dataType.simpleString()}"
                               for f in EXTRACT_SCHEMA.fields)
@@ -472,7 +484,6 @@ def run_extract(spark: SparkSession, input_path: str, output_path: str,
                 salt_span: int = DEFAULT_SALT_SPAN,
                 partitions: int | None = None,
                 resume: bool = True,
-                files_per_bucket: int | None = None,
                 dedup_texts: bool = False) -> dict:
     """Run (or resume) the extraction job. Returns run metrics.
 
@@ -494,14 +505,10 @@ def run_extract(spark: SparkSession, input_path: str, output_path: str,
     scan of the much smaller written output. input_rows counts rows that
     entered extraction, i.e. after the null/empty-text scan gate.
 
-    files_per_bucket (optional) bounds the sink's file count: without it,
-    every UDF partition that holds a bucket's rows writes a file into that
-    bucket dir (up to `partitions` files/bucket — fine for throughput, bad
-    for 100-TB namenode/manifest pressure). Setting it adds one exchange on
-    (bucket, file-salt) after extraction plus a sortWithinPartitions on
-    (conv_id, turn_idx), so each bucket dir gets ~files_per_bucket files
-    whose rows are stored in stable turn order (better scan locality and
-    parquet compression for downstream readers).
+    The sink clusters each wave by bucket (module docstring, "Sink rule"):
+    one exchange on (bucket, file salt) with the UDF stage's width n, then a
+    sort on (bucket, conv_id, turn_idx); a bucket dir gets at most ceil(n /
+    buckets in the wave) files per wave, rows in turn order.
     """
     # Dynamic per-partition overwrite is load-bearing: with the static
     # default, wave 2 (or a resume) would DELETE every previously committed
@@ -511,22 +518,18 @@ def run_extract(spark: SparkSession, input_path: str, output_path: str,
     # changes overwrite semantics of UNRELATED partitioned writes later in
     # the same session (ADVICE r2).
     _MODE_KEY = "spark.sql.sources.partitionOverwriteMode"
-    try:
-        prev_mode = spark.conf.get(_MODE_KEY)
-    except Exception:
-        prev_mode = "static"  # spark's shipped default
+    prev_mode = spark.conf.get(_MODE_KEY)
     spark.conf.set(_MODE_KEY, "dynamic")
     try:
         return _run_extract_waves(
             spark, input_path, output_path, n_buckets, salt_span,
-            partitions, resume, files_per_bucket, dedup_texts)
+            partitions, resume, dedup_texts)
     finally:
-        spark.conf.set(_MODE_KEY, prev_mode or "static")
+        spark.conf.set(_MODE_KEY, prev_mode)
 
 
 def _run_extract_waves(spark, input_path, output_path, n_buckets, salt_span,
-                       partitions, resume, files_per_bucket,
-                       dedup_texts) -> dict:
+                       partitions, resume, dedup_texts) -> dict:
     df_all = read_transcripts(spark, input_path)
 
     mio = _ManifestIO(spark, output_path)
@@ -557,27 +560,23 @@ def _run_extract_waves(spark, input_path, output_path, n_buckets, salt_span,
               "resumed_buckets_skipped": len(done), "waves": 0,
               "stale_buckets_removed": len(stale)}
 
+    # one width for the UDF stage and the write stage, so they cannot drift
+    n = udf_partitions(spark, partitions)
     for wave in waves:
         df = df_all.filter(F.col("bucket").isin(wave))
         if dedup_texts:
             out = extracted_dedup_df(df.drop("bucket"), n_buckets=n_buckets,
-                                     partitions=partitions)
+                                     partitions=n)
         else:
             out = extracted_df(df.drop("bucket"), n_buckets=n_buckets,
-                               salt_span=salt_span, partitions=partitions)
-        if files_per_bucket:
-            # distinct hash seed: pmod(xxhash64(conv_id), k) with the SAME
-            # hash as the bucket column is fully correlated when
-            # gcd(k, n_buckets) > 1 (power-of-two defaults collapse every
-            # bucket to ONE salt -> one skewed write task; review finding)
-            fsalt = F.pmod(F.xxhash64(F.lit("fsalt"), F.col("conv_id")),
-                           F.lit(files_per_bucket))
-            # leading "bucket" satisfies the dynamic-partition writer's
-            # required ordering, so it won't re-sort (and destroy the
-            # (conv_id, turn_idx) order) at write time
-            out = (out.repartition(len(wave) * files_per_bucket,
-                                   F.col("bucket"), fsalt)
-                   .sortWithinPartitions("bucket", "conv_id", "turn_idx"))
+                               salt_span=salt_span, partitions=n)
+        # file salt under its own seed (module docstring, "Sink rule");
+        # the leading "bucket" sort key satisfies the dynamic-partition
+        # writer's required ordering, so it does not re-sort at write time
+        fsalt = F.pmod(F.xxhash64(F.lit("fsalt"), F.col("conv_id")),
+                       F.lit(math.ceil(n / len(wave))))
+        out = (out.repartition(n, F.col("bucket"), fsalt)
+               .sortWithinPartitions("bucket", "conv_id", "turn_idx"))
         (out.write.mode("overwrite")
             .partitionBy("bucket")
             .parquet(output_path))

@@ -1,6 +1,7 @@
 """Spark-layer tests: vectorized UDF equivalence, salted pipeline,
 manifest/resume idempotency, golden-equality join. Uses sf0.001 synth data."""
 
+import math
 import os
 import shutil
 import sys
@@ -350,34 +351,61 @@ def test_bucketed_tables_join_without_shuffle(spark, synth_dir, tmp_path):
     spark.sql("DROP DATABASE bkt")
 
 
-def test_files_per_bucket_compaction(spark, synth_dir, tmp_path):
-    """files_per_bucket bounds sink file count and stores rows in stable
-    (conv_id, turn_idx) order within each file."""
+def test_sink_writes_one_file_per_bucket(spark, synth_dir, tmp_path):
+    """With the defaults (64 buckets; local[4] -> n = 8 UDF partitions,
+    k = ceil(8 / 64) = 1 file salt) each bucket dir holds at most one
+    parquet file, whose rows are in (conv_id, turn_idx) order, and the
+    written rows equal extracted_df on the same input."""
+    import glob
+
+    import pyarrow.parquet as pq
+    from snacktory_spark.pipeline.extract_job import (extracted_df,
+                                                      read_extracted,
+                                                      read_transcripts,
+                                                      run_extract)
+
+    src = f"{synth_dir}/transcripts.parquet"
+    out = str(tmp_path / "out_default")
+    m = run_extract(spark, src, out, resume=False)
+    assert m["output_rows"] > 0
+    files = glob.glob(f"{out}/bucket=*/*.parquet")
+    assert files
+    for d in glob.glob(f"{out}/bucket=*"):
+        assert len(glob.glob(f"{d}/*.parquet")) <= 1, d
+    for f in files:
+        t = pq.read_table(f, columns=["conv_id", "turn_idx"])
+        keys = list(zip(t.column("conv_id").to_pylist(),
+                        t.column("turn_idx").to_pylist()))
+        assert keys == sorted(keys), f
+    got = read_extracted(spark, out)
+    want = extracted_df(read_transcripts(spark, src)).select(got.columns)
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+
+
+def test_sink_compaction(spark, synth_dir, tmp_path):
+    """The bucket-clustered sink bounds each bucket dir to
+    k = ceil(n / buckets in the wave) files (n = 8 on local[4], 4 buckets
+    -> k = 2) and stores rows in stable (conv_id, turn_idx) order within
+    each file."""
     import glob
     from snacktory_spark.pipeline.extract_job import run_extract
 
     out = str(tmp_path / "out_compact")
     m = run_extract(spark, f"{synth_dir}/transcripts.parquet", out,
-                    n_buckets=4, files_per_bucket=1, resume=False)
-    assert m["output_rows"] > 0
+                    n_buckets=4, resume=False)
+    assert m["output_rows"] > 0 and m["waves"] == 1
+    k = math.ceil(2 * spark.sparkContext.defaultParallelism / 4)
     for b in range(4):
         files = glob.glob(f"{out}/bucket={b}/*.parquet")
-        assert len(files) <= 1, files  # empty buckets have none
+        assert len(files) <= k, files  # empty buckets have none
     # rows inside a file follow stable turn order
     import pyarrow.parquet as pq
-    some = next(f for b in range(4)
-                for f in glob.glob(f"{out}/bucket={b}/*.parquet"))
-    t = pq.read_table(some, columns=["conv_id", "turn_idx"])
-    keys = list(zip(t.column("conv_id").to_pylist(),
-                    t.column("turn_idx").to_pylist()))
-    assert keys == sorted(keys)
-    # content identical to the uncompacted run
-    plain = str(tmp_path / "out_plain")
-    run_extract(spark, f"{synth_dir}/transcripts.parquet", plain,
-                n_buckets=4, resume=False)
-    a = spark.read.parquet(out).select("conv_id", "turn_idx", "text")
-    b2 = spark.read.parquet(plain).select("conv_id", "turn_idx", "text")
-    assert a.exceptAll(b2).count() == 0 and b2.exceptAll(a).count() == 0
+    for f in glob.glob(f"{out}/bucket=*/*.parquet"):
+        t = pq.read_table(f, columns=["conv_id", "turn_idx"])
+        keys = list(zip(t.column("conv_id").to_pylist(),
+                        t.column("turn_idx").to_pylist()))
+        assert keys == sorted(keys), f
 
 
 def test_dedup_extract_matches_plain(spark, synth_dir, tmp_path):
@@ -422,16 +450,18 @@ def test_dedup_extract_matches_plain(spark, synth_dir, tmp_path):
     assert got.select("text").distinct().count() == 1
 
 
-def test_files_per_bucket_salt_independent_of_bucket(spark, synth_dir, tmp_path):
-    """With gcd(files_per_bucket, n_buckets) > 1 a salt derived from the
-    same conv-hash as the bucket collapses to ONE file per bucket (review
-    finding); the independent-seed salt must actually split buckets."""
+def test_sink_salt_independent_of_bucket(spark, synth_dir, tmp_path):
+    """With gcd(k, n_buckets) > 1 a file salt derived from the same
+    conv-hash as the bucket collapses to ONE file per bucket; the
+    independent-seed salt must actually split buckets. partitions =
+    2 * n_buckets forces k = 2 file salts per bucket."""
     import glob
     from snacktory_spark.pipeline.extract_job import run_extract
 
     out = str(tmp_path / "out_salt")
-    run_extract(spark, f"{synth_dir}/transcripts.parquet", out,
-                n_buckets=4, files_per_bucket=2, resume=False)
+    m = run_extract(spark, f"{synth_dir}/transcripts.parquet", out,
+                    n_buckets=4, partitions=8, resume=False)
+    assert m["waves"] == 1
     counts = [len(glob.glob(f"{out}/bucket={b}/*.parquet")) for b in range(4)]
     assert max(counts) == 2, counts  # at least one bucket really split
     assert all(c <= 2 for c in counts)
@@ -486,17 +516,18 @@ def test_manifest_read_failure_fails_the_run(spark, synth_dir, tmp_path,
 
 
 def test_dedup_and_compaction_compose(spark, synth_dir, tmp_path):
-    """dedup_texts + files_per_bucket together: distinct-text extraction,
-    bounded file count, full row fan-back."""
+    """dedup_texts + the bucket-clustered sink together: distinct-text
+    extraction, at most k = ceil(n / buckets) files per bucket, full row
+    fan-back."""
     import glob
     from snacktory_spark.pipeline.extract_job import run_extract
 
     out = str(tmp_path / "out_combo")
     m = run_extract(spark, f"{synth_dir}/transcripts.parquet", out,
-                    n_buckets=4, dedup_texts=True, files_per_bucket=1,
-                    resume=False)
-    assert m["output_rows"] > 0
-    assert all(len(glob.glob(f"{out}/bucket={b}/*.parquet")) <= 1
+                    n_buckets=4, dedup_texts=True, resume=False)
+    assert m["output_rows"] > 0 and m["waves"] == 1
+    k = math.ceil(2 * spark.sparkContext.defaultParallelism / 4)
+    assert all(len(glob.glob(f"{out}/bucket={b}/*.parquet")) <= k
                for b in range(4))
 
 
