@@ -5,9 +5,78 @@ Each case: fixture file (relative to /root/reference), optional seed url,
 and the exact assertions the reference test makes. Cases are added as they
 are verified to pass; divergences are tracked in KNOWN_DIVERGENCES with the
 reason (usually parse-tree differences of the vendored DOM vs jsoup).
+
+Fixture pages come from one of two sources, read by `fixture_text` /
+`fixture_bytes`:
+
+1. ``REFERENCE/<fixture>``, the reference checkout, when it exists;
+2. otherwise the committed ``data/synth/sf0.001`` tables, whose golden
+   turns embed 20 reference pages verbatim (FIXTURES.md §1): the
+   `transcripts.parquet` text of the rows that `expected.parquet` keys
+   by that fixture. That data is the only copy of those pages in the
+   repo, so it is never regenerated without the reference.
+
+A page in neither place raises FileNotFoundError. Tests that still need
+the reference checkout: the `data3_paulgraham`, `data5_stanford`,
+`jetwick`, `rian` and `vimeo` golden cases (pages not in the synth data),
+tests/test_converter.py (sniffs original bytes), the i4online /
+thevacationgals / medium hand ports, the tokenizer corpus equivalence
+test and the auto-ported suite (tests/test_reference_suite.py).
 """
 
+import functools
+import os
+
+import pandas as pd
+
+from snacktory_spark.converter import (bytes_to_string, read_file_as_string,
+                                       resolve_encoding)
+
 REFERENCE = "/root/reference"
+
+SYNTH = os.path.join(os.path.dirname(os.path.abspath(__file__)), os.pardir,
+                     "data", "synth", "sf0.001")
+
+
+@functools.cache
+def _committed_pages() -> dict[str, list[str]]:
+    """fixture -> texts of every committed golden turn that embeds it."""
+    keys = pd.read_parquet(os.path.join(SYNTH, "expected.parquet"),
+                           columns=["conv_id", "turn_idx", "fixture"])
+    turns = pd.read_parquet(os.path.join(SYNTH, "transcripts.parquet"),
+                            columns=["conv_id", "turn_idx", "text"])
+    rows = keys.merge(turns, on=["conv_id", "turn_idx"])
+    return rows.groupby("fixture")["text"].agg(list).to_dict()
+
+
+def fixture_text(rel: str) -> str:
+    """The fixture page `rel` as `read_file_as_string` loads it: from the
+    reference checkout when present, else from the committed synth turns."""
+    path = os.path.join(REFERENCE, rel)
+    if os.path.exists(path):
+        return read_file_as_string(path)
+    texts = _committed_pages().get(rel)
+    if texts is None:
+        raise FileNotFoundError(
+            f"fixture {rel!r}: neither {path} nor a golden turn keyed by it "
+            f"in {os.path.normpath(SYNTH)}/expected.parquet exists")
+    assert len(set(texts)) == 1, f"{rel}: committed turns disagree"
+    return texts[0]
+
+
+def fixture_bytes(rel: str) -> bytes:
+    """The fixture page `rel` as raw bytes: the reference file when present,
+    else the committed text encoded in the charset the page declares,
+    checked to decode back to exactly that text."""
+    path = os.path.join(REFERENCE, rel)
+    if os.path.exists(path):
+        with open(path, "rb") as f:
+            return f.read()
+    text = fixture_text(rel)
+    data = text.encode(resolve_encoding(text.encode("utf-8")))
+    assert bytes_to_string(data) == text, f"{rel}: charset round trip differs"
+    return data
+
 
 # assertion keys:
 #   title, title_start, text_start, text_end, text_contains (list), text_equals,

@@ -1,5 +1,11 @@
 """End-to-end golden-fixture tests (the reference's primary test strategy,
-SURVEY.md §5): fixture HTML → extract → exact assertions."""
+SURVEY.md §5): fixture HTML → extract → exact assertions.
+
+Pages load through `golden_cases.fixture_text`: the reference checkout's
+file when it exists, else the page embedded verbatim in the committed
+``data/synth/sf0.001`` golden turns. Without the reference, the cases whose
+pages are not in the synth data (data3_paulgraham, data5_stanford, jetwick,
+rian, vimeo) fail with FileNotFoundError."""
 
 import os
 import sys
@@ -8,17 +14,15 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(__file__))
 
-from golden_cases import GOLDEN_CASES, KNOWN_DIVERGENCES, REFERENCE  # noqa: E402
+from golden_cases import GOLDEN_CASES, KNOWN_DIVERGENCES, fixture_text  # noqa: E402
 
-from snacktory_spark.converter import read_file_as_string  # noqa: E402
 from snacktory_spark.dates import format_date_utc  # noqa: E402
 from snacktory_spark.extractor import extract  # noqa: E402
 
 
 def run_case(case: dict) -> list[str]:
     """Run one golden case; returns list of failed-assertion descriptions."""
-    path = os.path.join(REFERENCE, case["fixture"])
-    html = read_file_as_string(path)
+    html = fixture_text(case["fixture"])
     res = extract(html, url=case.get("url", ""))
     failures = []
 
@@ -71,3 +75,24 @@ def test_golden(case):
         pytest.skip(f"known divergence: {KNOWN_DIVERGENCES[case['name']]}")
     failures = run_case(case)
     assert not failures, f"{case['name']}:\n  " + "\n  ".join(failures)
+
+
+def test_fixture_loader_sources(tmp_path, monkeypatch):
+    """A reference file wins over the committed page; a page in neither
+    source raises FileNotFoundError naming both."""
+    import golden_cases
+
+    rel = "src/test/resources/de/jetwick/snacktory/cnn.html"
+    committed = fixture_text(rel)
+    raw = golden_cases.fixture_bytes(rel)
+    assert raw.decode("iso-8859-1") == committed  # cnn declares iso-8859-1
+
+    monkeypatch.setattr(golden_cases, "REFERENCE", str(tmp_path))
+    (tmp_path / rel).parent.mkdir(parents=True)
+    (tmp_path / rel).write_bytes(b"<html><title>from reference</title></html>")
+    assert fixture_text(rel) == "<html><title>from reference</title></html>"
+    assert golden_cases.fixture_bytes(rel).startswith(b"<html><title>from")
+
+    with pytest.raises(FileNotFoundError, match="expected.parquet") as err:
+        fixture_text("test_data/3.html")
+    assert str(tmp_path) in str(err.value)

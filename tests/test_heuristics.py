@@ -5,7 +5,7 @@ import sys
 
 sys.path.insert(0, "/root/repo")
 
-from snacktory_spark.converter import read_file_as_string
+from golden_cases import fixture_text
 from snacktory_spark.extractor import extract
 from snacktory_spark.heuristics import ArticleTextExtractor, Heuristics
 
@@ -21,8 +21,7 @@ HTML = """<html><body>
 
 def test_defaults_unchanged_via_facade():
     """The facade with no tuning must byte-match plain extract()."""
-    html = read_file_as_string(
-        "/root/reference/src/test/resources/de/jetwick/snacktory/cnn.html")
+    html = fixture_text("src/test/resources/de/jetwick/snacktory/cnn.html")
     assert ArticleTextExtractor().extract_content(html) == extract(html)
 
 

@@ -10,6 +10,7 @@ import sys
 
 sys.path.insert(0, "/root/repo")
 
+from golden_cases import fixture_text
 from snacktory_spark.converter import read_file_as_string
 from snacktory_spark.extractor import extract
 from snacktory_spark.formatter import OutputFormatter
@@ -41,7 +42,8 @@ def test_i4online_default_and_custom_formatter():
 
 def test_images_list_two_fixtures():
     """ArticleTextExtractorTest.java:866-885 — reuters + thevacationgals."""
-    res = extract(read_file_as_string(RES + "reuters.html"))
+    res = extract(
+        fixture_text("src/test/resources/de/jetwick/snacktory/reuters.html"))
     assert len(res["images"]) == 1
     assert res["image_url"] == res["images"][0]["src"]
     assert res["images"][0]["src"] == (

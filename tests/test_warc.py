@@ -203,14 +203,13 @@ def test_distributed_warc_to_extraction(tmp_path):
     (CDX index → seek+read → HTTP split → charset decode, all
     executor-side — no driver-side byte handling), fed to the full
     extraction pipeline, and checked against the reference's own golden
-    expectations."""
+    expectations. Pages load through `golden_cases.fixture_bytes`."""
     import datetime as dt
-    import os
 
     from pyspark.sql import functions as F
 
     sys.path.insert(0, "/root/repo/tests")
-    from golden_cases import GOLDEN_CASES
+    from golden_cases import GOLDEN_CASES, fixture_bytes
 
     from snacktory_spark.pipeline.extract_job import (build_session,
                                                       extracted_df)
@@ -218,11 +217,8 @@ def test_distributed_warc_to_extraction(tmp_path):
 
     wanted = {"data1_npr", "cnn", "bbc_noscript", "reuters"}
     cases = [c for c in GOLDEN_CASES if c["name"] in wanted]
-    pages = []
-    for c in cases:
-        with open(os.path.join("/root/reference", c["fixture"]),
-                  "rb") as f:
-            pages.append((f"http://fixtures.test/{c['name']}", f.read()))
+    pages = [(f"http://fixtures.test/{c['name']}", fixture_bytes(c["fixture"]))
+             for c in cases]
     (tmp_path / "crawl.warc.gz").write_bytes(
         write_warc(pages, gzip_members=True))
 
@@ -452,14 +448,14 @@ def test_warc_to_extraction_end_to_end(tmp_path):
     charset path (bytes_to_string), run the FULL snacktory extraction
     pipeline over the recovered pages, and check the reference's own
     golden expectations — the archived-fetch → extraction hop a Common
-    Crawl pipeline runs, end to end."""
+    Crawl pipeline runs, end to end. Pages load through
+    `golden_cases.fixture_bytes`."""
     import datetime as dt
-    import os
 
     from pyspark.sql import functions as F
 
     sys.path.insert(0, "/root/repo/tests")
-    from golden_cases import GOLDEN_CASES
+    from golden_cases import GOLDEN_CASES, fixture_bytes
 
     from snacktory_spark.converter import bytes_to_string
     from snacktory_spark.pipeline.extract_job import (build_session,
@@ -467,11 +463,8 @@ def test_warc_to_extraction_end_to_end(tmp_path):
 
     wanted = {"data1_npr", "cnn", "bbc_noscript", "reuters"}
     cases = [c for c in GOLDEN_CASES if c["name"] in wanted]
-    pages = []
-    for c in cases:
-        path = os.path.join("/root/reference", c["fixture"])
-        with open(path, "rb") as f:
-            pages.append((f"http://fixtures.test/{c['name']}", f.read()))
+    pages = [(f"http://fixtures.test/{c['name']}", fixture_bytes(c["fixture"]))
+             for c in cases]
     warc = write_warc(pages, gzip_members=True)
 
     # distributed recovery: WARC bytes -> (uri, html string) rows via the
