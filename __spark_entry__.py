@@ -1579,9 +1579,11 @@ def q_doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     (identical output, oracle hash-verified). Bigrams are keyed as
     xxhash64(tok_i, tok_i+1) longs — see _bigram_at for the measured
     string/struct/long ladder and the collision argument. Scales: narrow
-    map, the only cost is O(n log n) per row."""
+    map, the only cost is O(n log n) per row. A plain scan: _split_scan
+    measured no better here (sf0.1, local[4]: 0.28 s split vs 0.27 s
+    plain, min of 6)."""
     return _doc_repetition_over(
-        _split_scan(spark, f"{sf_dir}/documents.parquet", "doc_id"))
+        spark.read.parquet(f"{sf_dir}/documents.parquet"))
 
 
 def _doc_repetition_over(docs: DataFrame) -> DataFrame:

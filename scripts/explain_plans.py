@@ -89,10 +89,11 @@ def main():
     from snacktory_spark.pipeline.extract_job import extracted_dedup_df
     sections.append(("dedup-extract (result cache at scale)",
                      plan_of(extracted_dedup_df(tdf)),
-                     "HashAggregate(keys=[h]) dedup → ONE MapInPandas over "
-                     "distinct texts → SortMergeJoin/ShuffledHashJoin back "
-                     "on the md5 key. No nested-loop join; lineage columns "
-                     "come from the original scan side."))
+                     "Aggregate(keys=[h]) dedup → ONE MapInPandas (the "
+                     "shared extract_map_in_pandas) over distinct texts → "
+                     "hash join back on the sha256 key h. No nested-loop "
+                     "join; the keys and input_file come from the scan "
+                     "side, input_bytes from the UDF."))
 
     # 10. pdf round-trip: two narrow python stages, no shuffle
     sections.append(("pdf_roundtrip (binary-column layout parse)",
@@ -132,12 +133,12 @@ def main():
                      "map-side), ObjectHashAggregate reassembly, broadcast "
                      "join back to the doc list."))
 
-    # 14. doc_repetition: two-level agg, both with partial combine
+    # 14. doc_repetition: one narrow map over the scan
     sections.append(("doc_repetition (Gopher repetition filters)",
                      plan_of(em.q_doc_repetition(spark, SF_DIR)),
-                     "Generate(explode) -> partial+final HashAggregate on "
-                     "(doc_id, gram) -> partial+final HashAggregate on "
-                     "doc_id. No joins, no windows."))
+                     "Per-document bigram statistics in one narrow "
+                     "Project over a plain scan: no exchange, no joins, "
+                     "no windows."))
 
     # 15. source_quota: per-source top-k must prune map-side
     sections.append(("source_quota (per-source quotas)",

@@ -8,7 +8,7 @@ Cluster deployment (the north-rule launch path):
         --input  <transcripts parquet dir or iceberg identifier> \
         --output <dir> \
         [--bench-grams <parquet with a `gram` column>] \
-        [--buckets 4096] [--seq-len 2048] [--dedup-texts] [--no-resume]
+        [--buckets 4096] [--seq-len 2048] [--no-resume]
 
 Local smoke (or use `python -m snacktory_spark.pipeline.corpus_prep_job`
 directly — this file only exists because spark-submit wants a script):

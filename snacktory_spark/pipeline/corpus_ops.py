@@ -107,12 +107,9 @@ def seed_bench_grams(tr: DataFrame, gram_width: int = 8,
 
     Driver extraction (r10): a full mapInPandas job for 3 rows cost
     ~0.4s of pure stage/worker overhead per corpus_prep call; the driver
-    call is ~1 ms. It must match the chain's extraction exactly:
-    `extract_row(text, "")` relies on url="" being
-    extract_map_in_pandas's default when the input has no url column —
-    threading a url column through the transcripts would make the chain
-    extract with it while the seeds would not, and the bench grams would
-    drift. The gram itself still evaluates through the SHARED JVM
+    call is ~1 ms. It must match the chain's extraction exactly, so it
+    calls `extract_row(text, "")` as extract_map_in_pandas does for every
+    row. The gram itself still evaluates through the SHARED JVM
     `tokens_expr` on a local 1-stage DataFrame — a Python
     re-tokenization here could drift from the chain's tokenizer."""
     ids = [r[0] for r in (tr.filter(F.col("turn_idx") == 0)
@@ -122,7 +119,7 @@ def seed_bench_grams(tr: DataFrame, gram_width: int = 8,
                            & F.col("conv_id").isin(ids))
                  .select("text").collect())
     from ..udf import extract_row
-    # url="": extract_map_in_pandas's default without a url column
+    # url="": what extract_map_in_pandas passes for every row
     extracted = [extract_row(r["text"], "") for r in seed_rows]
     texts = [e["text"] for e in extracted if e["extract_ok"] and e["text"]]
     if not texts:

@@ -115,7 +115,6 @@ def run_corpus_prep(spark: SparkSession, input_path: str, output_path: str,
                     salt_span: int = DEFAULT_SALT_SPAN,
                     partitions: int | None = None,
                     resume: bool = True,
-                    dedup_texts: bool = False,
                     near_dedup_jaccard: float | None = None,
                     exact_substr_window: int | None = None,
                     min_tokens: int = 30,
@@ -144,8 +143,7 @@ def run_corpus_prep(spark: SparkSession, input_path: str, output_path: str,
     # ---- stage 1: extraction (per-bucket manifest + anti-join resume) ----
     ex = run_extract(spark, input_path, out + "/extracted",
                      n_buckets=n_buckets, salt_span=salt_span,
-                     partitions=partitions, resume=resume,
-                     dedup_texts=dedup_texts)
+                     partitions=partitions, resume=resume)
 
     bench = None
     if bench_grams_path:
@@ -160,7 +158,7 @@ def run_corpus_prep(spark: SparkSession, input_path: str, output_path: str,
     surv_config = {"input_path": input_path, "n_buckets": n_buckets,
                    "bench_grams_path": bench_grams_path,
                    "bench_fingerprint": _bench_fingerprint(bench),
-                   "gram_width": gram_width, "dedup_texts": dedup_texts,
+                   "gram_width": gram_width,
                    "near_dedup_jaccard": near_dedup_jaccard,
                    "min_tokens": min_tokens,
                    "min_stopword_ratio": min_stopword_ratio,
@@ -376,9 +374,6 @@ def main(argv=None) -> None:
     p.add_argument("--gram-width", type=int, default=8)
     p.add_argument("--salt-span", type=int, default=DEFAULT_SALT_SPAN)
     p.add_argument("--partitions", type=int, default=None)
-    p.add_argument("--dedup-texts", action="store_true",
-                   help="extract each distinct text once (result-cache "
-                        "shape; worth it on high-duplicate corpora)")
     p.add_argument("--near-dedup-jaccard", type=float, default=None,
                    help="enable MinHash/LSH near-duplicate removal at "
                         "this shingle-Jaccard threshold (e.g. 0.6); "
@@ -405,7 +400,6 @@ def main(argv=None) -> None:
         bench_grams_path=args.bench_grams, gram_width=args.gram_width,
         salt_span=args.salt_span, partitions=args.partitions,
         resume=not args.no_resume,
-        dedup_texts=args.dedup_texts,
         near_dedup_jaccard=args.near_dedup_jaccard,
         exact_substr_window=args.exact_substr_window,
         min_tokens=args.min_tokens,

@@ -5,7 +5,8 @@ UDF map → bucket exchange → write; two shuffles, one each side of the UDF):
 
   read parquet/iceberg (explicit schema, predicate pushdown + column pruning
       reach the scan — we select only the needed columns)
-  → filter(text IS NOT NULL AND length(text) > 0)   [cheap JVM-side gate]
+  → filter(has_text(): non-null, non-empty text)   [cheap JVM-side gate;
+      gated_turns, shared with extracted_dedup_df and streaming]
   → repartition(n, xxhash64(conv_id, turn_idx DIV SALT_SPAN))
       conv_id-hash salting: turns of one mega-conversation spread over
       ceil(len/SALT_SPAN) partitions — defuses long-conversation skew while
@@ -13,7 +14,7 @@ UDF map → bucket exchange → write; two shuffles, one each side of the UDF):
   → mapInPandas(extract)        [Arrow-vectorized, no per-row Python]
   → repartition(n, bucket, file-salt) + sortWithinPartitions(bucket,
       conv_id, turn_idx)        [run_extract only; see the sink rule below]
-  → write parquet partitioned by bucket = pmod(xxhash64(conv_id), N_BUCKETS)
+  → write parquet partitioned by bucket = bucket_of(N_BUCKETS), a conv_id hash
 
 Sink rule: every file costs a create/commit (an object on a cluster, a
 forked chmod on a local filesystem without libhadoop), so a wave writes
@@ -53,8 +54,8 @@ import os
 import re
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import IntegerType, StructField, StructType
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from ..schema import EXTRACTED_SCHEMA, TRANSCRIPT_SCHEMA
 from ..udf import extract_map_in_pandas
@@ -63,9 +64,16 @@ DEFAULT_SALT_SPAN = 64      # turns of one conv kept together per salt unit
 DEFAULT_N_BUCKETS = 64      # output commit granularity
 MAX_WAVES = 4               # a kill loses at most a quarter of the run
 
+# the transcript columns extraction passes through to EXTRACTED_SCHEMA
+_KEY_COLS = ("conv_id", "turn_idx", "role", "tool", "ts")
 # the written extract table: EXTRACTED_SCHEMA + the bucket partition column
 _WRITTEN_SCHEMA = StructType(list(EXTRACTED_SCHEMA.fields)
                              + [StructField("bucket", IntegerType(), True)])
+# the dedup path's UDF output: EXTRACTED_SCHEMA with the content hash h
+# in place of the transcript keys
+_DEDUP_SCHEMA = StructType(
+    [StructField("h", StringType(), False)]
+    + [f for f in EXTRACTED_SCHEMA.fields if f.name not in _KEY_COLS])
 
 
 def ensure_py_files(spark: SparkSession) -> None:
@@ -133,9 +141,9 @@ def build_session(app: str = "snacktory-extract", master: str | None = None,
          .config("spark.sql.execution.arrow.pyspark.enabled", "true")
          # large HTML rows: keep Arrow batches small to bound worker memory
          # (512×500KB cap = 256MB worst case per in-flight batch; raising to
-         # 2048 gains ~8% throughput when rows are known-small)
-         .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                 os.environ.get("SNACKTORY_ARROW_BATCH", "512"))
+         # 2048 gains ~8% throughput when rows are known-small; it is a
+         # runtime SQL conf, so spark.conf.set overrides it per session)
+         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
          .config("spark.sql.parquet.compression.codec", "zstd")
          .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
          .config("spark.sql.session.timeZone", "UTC"))
@@ -394,6 +402,30 @@ def udf_partitions(spark: SparkSession, partitions: int | None = None) -> int:
     return partitions or 2 * spark.sparkContext.defaultParallelism
 
 
+def has_text() -> Column:
+    """The extraction gate: rows with no text never reach the UDF."""
+    return F.col("text").isNotNull() & (F.length("text") > 0)
+
+
+def gated_turns(df: DataFrame, lineage: bool) -> DataFrame:
+    """The extraction stage's input, shared by the plain, dedup and
+    streaming paths: the transcript keys and text of every row that passes
+    has_text(), plus `input_file` when `lineage` is set. input_file is
+    attached AFTER the filter: a projection containing input_file_name()
+    (marked nondeterministic) blocks predicate pushdown, and the
+    IsNotNull(text) gate must reach the parquet scan."""
+    ensure_py_files(df.sparkSession)
+    gated = df.select(*_KEY_COLS, "text").filter(has_text())
+    if lineage:
+        gated = gated.withColumn("input_file", F.input_file_name())
+    return gated
+
+
+def bucket_of(n_buckets: int) -> Column:
+    """A row's output bucket: its conversation's hash mod n_buckets."""
+    return F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
+
+
 def extracted_df(df: DataFrame, n_buckets: int = DEFAULT_N_BUCKETS,
                  salt_span: int = DEFAULT_SALT_SPAN,
                  partitions: int | None = None,
@@ -407,23 +439,12 @@ def extracted_df(df: DataFrame, n_buckets: int = DEFAULT_N_BUCKETS,
     ~60-byte path string per row and carry it through the salt exchange
     and the Arrow boundary both ways. The WRITE path (run_extract) keeps
     the default: manifests derive their source-file stats from it."""
-    ensure_py_files(df.sparkSession)
-    gated = (df
-             .select("conv_id", "turn_idx", "role", "tool", "ts", "text")
-             .filter(F.col("text").isNotNull() & (F.length("text") > 0)))
-    if lineage:
-        # input_file is captured at the scan stage but attached AFTER
-        # the filter: a projection containing input_file_name() (marked
-        # nondeterministic) blocks predicate pushdown, and the
-        # IsNotNull(text) gate must reach the parquet scan
-        gated = gated.withColumn("input_file", F.input_file_name())
     salt = F.xxhash64(F.col("conv_id"),
                       (F.col("turn_idx") / F.lit(salt_span)).cast("long"))
-    salted = gated.repartition(udf_partitions(df.sparkSession, partitions),
-                               salt)
+    salted = gated_turns(df, lineage).repartition(
+        udf_partitions(df.sparkSession, partitions), salt)
     out = salted.mapInPandas(extract_map_in_pandas, schema=EXTRACTED_SCHEMA)
-    return out.withColumn(
-        "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int"))
+    return out.withColumn("bucket", bucket_of(n_buckets))
 
 
 def extracted_dedup_df(df: DataFrame, n_buckets: int = DEFAULT_N_BUCKETS,
@@ -437,55 +458,33 @@ def extracted_dedup_df(df: DataFrame, n_buckets: int = DEFAULT_N_BUCKETS,
     tool turns, crawl re-fetches): UDF cost scales with DISTINCT texts,
     while the added cost is one dropDuplicates shuffle of (hash, text) and
     one hash-join on a 64-char sha256 key. Output schema and content
-    match extracted_df row for row (input_bytes is always derived from
-    the original text; input_file is captured only with lineage=True,
-    NULL otherwise, mirroring extracted_df); work distribution is by
-    content hash — uniform by construction, so no conversation-length
-    skew."""
-    from ..udf import extract_distinct_map_in_pandas
-    from ..schema import EXTRACT_SCHEMA
-
-    ensure_py_files(df.sparkSession)
-    gated = (df
-             .select("conv_id", "turn_idx", "role", "tool", "ts", "text")
-             .filter(F.col("text").isNotNull() & (F.length("text") > 0)))
-    if lineage:
-        gated = gated.withColumn("input_file", F.input_file_name())
-    hashed = (gated
-              # sha256, not md5: the hash is a content-EQUALITY key here
-              # (md5 chosen-prefix collisions are practical, and a collision
-              # would silently assign one page's extraction to another)
-              .withColumn("h", F.sha2(F.col("text"), 256))
-              # utf-8 input size per row, captured before text is dropped
-              .withColumn("input_bytes", F.octet_length("text").cast("long")))
+    match extracted_df row for row: equal hashes mean equal texts, so the
+    UDF's per-text input_bytes holds for every row it joins back to;
+    input_file is captured only with lineage=True, NULL otherwise,
+    mirroring extracted_df. Work distribution is by content hash —
+    uniform by construction, so no conversation-length skew."""
+    # sha256, not md5: the hash is a content-EQUALITY key here (md5
+    # chosen-prefix collisions are practical, and a collision would
+    # silently assign one page's extraction to another)
+    hashed = gated_turns(df, lineage).withColumn("h", F.sha2("text", 256))
     distinct = (hashed.select("h", "text")
                 .dropDuplicates(["h"])
                 .repartition(udf_partitions(df.sparkSession, partitions), "h"))
-    res_schema = ("h string, "
-                  + ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                              for f in EXTRACT_SCHEMA.fields)
-                  + ", output_bytes long")
-    res = distinct.mapInPandas(extract_distinct_map_in_pandas, schema=res_schema)
-    joined = hashed.drop("text").join(res, "h")
-    out = joined.select(
-        "conv_id", "turn_idx", "role", "tool", "ts",
-        *[f.name for f in EXTRACT_SCHEMA.fields],
-        "input_bytes", "output_bytes",
-        # schema parity with extracted_df(lineage=False): column present,
-        # NULL values — nothing was captured, so nothing transits the join
-        *([F.col("input_file")] if lineage
-          else [F.lit(None).cast("string").alias("input_file")]))
-    return out.withColumn(
-        "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int"))
+    res = distinct.mapInPandas(extract_map_in_pandas, schema=_DEDUP_SCHEMA)
+    if lineage:
+        res = res.drop("input_file")  # NULL: the row's own comes from hashed
+    out = (hashed.drop("text").join(res, "h")
+           .select(*EXTRACTED_SCHEMA.fieldNames()))
+    return out.withColumn("bucket", bucket_of(n_buckets))
 
 
 def run_extract(spark: SparkSession, input_path: str, output_path: str,
                 n_buckets: int = DEFAULT_N_BUCKETS,
                 salt_span: int = DEFAULT_SALT_SPAN,
                 partitions: int | None = None,
-                resume: bool = True,
-                dedup_texts: bool = False) -> dict:
-    """Run (or resume) the extraction job. Returns run metrics.
+                resume: bool = True) -> dict:
+    """Run (or resume) the extraction job (extracted_df per wave). Returns
+    run metrics.
 
     The missing buckets are processed in WAVES: each wave is written +
     manifested before the next starts, so a killed job loses at most one
@@ -497,9 +496,7 @@ def run_extract(spark: SparkSession, input_path: str, output_path: str,
     keeps MAX_WAVES waves to bound the blast radius of a failure.
 
     The input text column is scanned exactly ONCE per wave (the extract
-    pass itself); with dedup_texts=True it is read twice (hash side +
-    distinct side of the self-join) in exchange for extracting each
-    distinct text once. The extraction UDF is strictly 1-row-in/1-row-out and
+    pass itself). The extraction UDF is strictly 1-row-in/1-row-out and
     emits input_bytes + input_file lineage columns, so every manifest
     metric (rows, input/output bytes, source files) is derived from one
     scan of the much smaller written output. input_rows counts rows that
@@ -523,13 +520,39 @@ def run_extract(spark: SparkSession, input_path: str, output_path: str,
     try:
         return _run_extract_waves(
             spark, input_path, output_path, n_buckets, salt_span,
-            partitions, resume, dedup_texts)
+            partitions, resume)
     finally:
         spark.conf.set(_MODE_KEY, prev_mode)
 
 
+# the run totals summed from the bucket records
+_TOTAL_KEYS = ("input_rows", "input_bytes", "output_rows", "ok_rows",
+               "error_rows")
+
+
+def _bucket_record(bucket: int, agg: dict, input_path: str,
+                   n_buckets: int) -> dict:
+    """A bucket's manifest record from its row of the written-output
+    aggregate; `agg` is empty for a bucket with no rows, which is complete
+    too, so resume does not re-plan it forever."""
+    def count(k):
+        return int(agg.get(k) or 0)
+    return {"bucket": bucket,
+            "input_rows": count("output_rows"),  # UDF is 1-in/1-out
+            "output_rows": count("output_rows"),
+            "input_bytes": count("input_bytes"),
+            "output_bytes": count("output_bytes"),
+            "ok_rows": count("ok_rows"),
+            "error_rows": count("error_rows"),
+            "approx_convs": count("approx_convs"),
+            "n_input_files": count("n_input_files"),
+            "first_input_file": agg.get("first_input_file"),
+            "input_path": input_path,
+            "n_buckets": n_buckets}
+
+
 def _run_extract_waves(spark, input_path, output_path, n_buckets, salt_span,
-                       partitions, resume, dedup_texts) -> dict:
+                       partitions, resume) -> dict:
     df_all = read_transcripts(spark, input_path)
 
     mio = _ManifestIO(spark, output_path)
@@ -552,9 +575,6 @@ def _run_extract_waves(spark, input_path, output_path, n_buckets, salt_span,
                      len(missing) * (i + 1) // n_waves]
              for i in range(n_waves)]
 
-    df_all = df_all.withColumn(
-        "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int"))
-
     totals = {"input_rows": 0, "input_bytes": 0, "output_rows": 0,
               "ok_rows": 0, "error_rows": 0, "buckets_written": 0,
               "resumed_buckets_skipped": len(done), "waves": 0,
@@ -563,13 +583,9 @@ def _run_extract_waves(spark, input_path, output_path, n_buckets, salt_span,
     # one width for the UDF stage and the write stage, so they cannot drift
     n = udf_partitions(spark, partitions)
     for wave in waves:
-        df = df_all.filter(F.col("bucket").isin(wave))
-        if dedup_texts:
-            out = extracted_dedup_df(df.drop("bucket"), n_buckets=n_buckets,
-                                     partitions=n)
-        else:
-            out = extracted_df(df.drop("bucket"), n_buckets=n_buckets,
-                               salt_span=salt_span, partitions=n)
+        out = extracted_df(df_all.filter(bucket_of(n_buckets).isin(wave)),
+                           n_buckets=n_buckets, salt_span=salt_span,
+                           partitions=n)
         # file salt under its own seed (module docstring, "Sink rule");
         # the leading "bucket" sort key satisfies the dynamic-partition
         # writer's required ordering, so it does not re-sort at write time
@@ -596,38 +612,13 @@ def _run_extract_waves(spark, input_path, output_path, n_buckets, salt_span,
                      F.countDistinct("input_file").alias("n_input_files"),
                      F.min("input_file").alias("first_input_file"))
                 .collect())
-        seen_buckets = set()
-        for r in rows:
-            rec = {"bucket": int(r["bucket"]),
-                   "input_rows": int(r["output_rows"]),  # UDF is 1-in/1-out
-                   "output_rows": int(r["output_rows"]),
-                   "input_bytes": int(r["input_bytes"] or 0),
-                   "output_bytes": int(r["output_bytes"] or 0),
-                   "ok_rows": int(r["ok_rows"]),
-                   "error_rows": int(r["error_rows"]),
-                   "approx_convs": int(r["approx_convs"]),
-                   "n_input_files": int(r["n_input_files"]),
-                   "first_input_file": r["first_input_file"],
-                   "input_path": input_path,
-                   "n_buckets": n_buckets}
-            mio.write_atomic(rec)
-            seen_buckets.add(rec["bucket"])
-        # buckets with zero input rows are complete too — manifest them so
-        # resume doesn't re-plan them forever
+        aggs = {int(r["bucket"]): r.asDict() for r in rows}
         for b in wave:
-            if b not in seen_buckets:
-                mio.write_atomic({
-                    "bucket": b, "input_rows": 0, "output_rows": 0,
-                    "input_bytes": 0, "output_bytes": 0,
-                    "ok_rows": 0, "error_rows": 0, "approx_convs": 0,
-                    "n_input_files": 0, "first_input_file": None,
-                    "input_path": input_path, "n_buckets": n_buckets})
-        totals["input_rows"] += sum(int(r["output_rows"]) for r in rows)
-        totals["input_bytes"] += sum(int(r["input_bytes"] or 0) for r in rows)
-        totals["output_rows"] += sum(int(r["output_rows"]) for r in rows)
-        totals["ok_rows"] += sum(int(r["ok_rows"]) for r in rows)
-        totals["error_rows"] += sum(int(r["error_rows"]) for r in rows)
-        totals["buckets_written"] += len(rows)
+            rec = _bucket_record(b, aggs.get(b, {}), input_path, n_buckets)
+            mio.write_atomic(rec)
+            for k in _TOTAL_KEYS:
+                totals[k] += rec[k]
+        totals["buckets_written"] += len(aggs)
         totals["waves"] += 1
 
     return totals

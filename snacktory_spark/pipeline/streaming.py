@@ -16,18 +16,15 @@ from pyspark.sql import SparkSession, functions as F
 
 from ..schema import EXTRACTED_SCHEMA, TRANSCRIPT_SCHEMA
 from ..udf import extract_map_in_pandas
+from .extract_job import ensure_py_files, gated_turns, has_text
 
 
 def streaming_extracted(spark: SparkSession, input_dir: str):
-    from .extract_job import ensure_py_files
-    ensure_py_files(spark)
     stream = (spark.readStream
               .schema(TRANSCRIPT_SCHEMA)
               .parquet(input_dir))
-    gated = (stream
-             .select("conv_id", "turn_idx", "role", "tool", "ts", "text")
-             .filter(F.col("text").isNotNull() & (F.length("text") > 0)))
-    return gated.mapInPandas(extract_map_in_pandas, schema=EXTRACTED_SCHEMA)
+    return gated_turns(stream, lineage=False).mapInPandas(
+        extract_map_in_pandas, schema=EXTRACTED_SCHEMA)
 
 
 def streaming_conv_stats(spark: SparkSession, input_dir: str,
@@ -72,8 +69,7 @@ def streaming_dedup_turns(spark: SparkSession, input_dir: str,
               .schema(TRANSCRIPT_SCHEMA)
               .parquet(input_dir))
     hashed = (stream
-              .filter(F.col("text").isNotNull() & (F.length("text") > 0)
-                      & F.col("ts").isNotNull())
+              .filter(has_text() & F.col("ts").isNotNull())
               .withColumn("text_sha", F.sha2(F.col("text"), 256)))
     return (hashed
             .withWatermark("ts", watermark)
@@ -142,7 +138,6 @@ def streaming_conv_progress(spark: SparkSession, input_dir: str):
 def run_streaming_progress_once(spark: SparkSession, input_dir: str,
                                 output_dir: str, checkpoint_dir: str,
                                 timeout_sec: int = 300) -> bool:
-    from .extract_job import ensure_py_files
     ensure_py_files(spark)
     out = streaming_conv_progress(spark, input_dir)
 

@@ -67,40 +67,27 @@ def _results_to_frame(results: list[dict]) -> pd.DataFrame:
     return frame
 
 
-def extract_map_in_pandas(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas stage: transcript batches → flat extracted batches.
+def _utf8_sizes(texts) -> list[int]:
+    return [len(t.encode("utf-8")) if isinstance(t, str) else 0
+            for t in texts]
 
-    Expects columns conv_id, turn_idx, role, tool, ts, text (and optionally
-    url). Emits EXTRACTED_SCHEMA-shaped batches: the key columns, the
-    extraction result and the lineage columns, one row per input row.
+
+def extract_map_in_pandas(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """The one mapInPandas stage: batches with a `text` column → one row
+    per input row with the extraction result.
+
+    Every input column but `text` and `input_file` passes through first
+    (the transcript keys conv_id, turn_idx, role, tool, ts; or the content
+    hash h on the dedup path), then the EXTRACT_SCHEMA fields, then the
+    lineage columns: exact input/output byte sizes and the source file
+    (NULL when the batch has no input_file), so manifests derive from a
+    column-pruned scan of the written output alone.
     """
     for pdf in iterator:
-        url = pdf["url"] if "url" in pdf.columns else pd.Series([""] * len(pdf))
-        out = _results_to_frame([extract_row(t, u) for t, u in zip(pdf["text"], url)])
-        keys = [k for k in ("conv_id", "turn_idx", "role", "tool", "ts")
-                if k in pdf.columns]
-        # lineage columns (EXTRACTED_SCHEMA tail): exact input/output byte
-        # sizes + source file, so manifests derive from a column-pruned scan
-        # of the written output alone (no re-read of either text column)
-        out["input_bytes"] = [
-            len(t.encode("utf-8")) if isinstance(t, str) else 0
-            for t in pdf["text"]]
-        out["output_bytes"] = [
-            len(t.encode("utf-8")) if isinstance(t, str) else 0
-            for t in out["text"]]
-        out["input_file"] = (pdf["input_file"].reset_index(drop=True)
-                             if "input_file" in pdf.columns else None)
-        yield pd.concat([pdf[keys].reset_index(drop=True), out], axis=1)
-
-
-def extract_distinct_map_in_pandas(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas stage for the dedup-extract path: (h, text) batches →
-    (h, <EXTRACT_SCHEMA fields>, output_bytes). One extraction per DISTINCT
-    text; the caller joins results back to every row by h."""
-    for pdf in iterator:
+        pdf = pdf.reset_index(drop=True)
         out = _results_to_frame([extract_row(t, "") for t in pdf["text"]])
-        out.insert(0, "h", pdf["h"].reset_index(drop=True))
-        out["output_bytes"] = [
-            len(t.encode("utf-8")) if isinstance(t, str) else 0
-            for t in out["text"]]
-        yield out
+        out["input_bytes"] = _utf8_sizes(pdf["text"])
+        out["output_bytes"] = _utf8_sizes(out["text"])
+        out["input_file"] = pdf.get("input_file")
+        keys = pdf.drop(columns=["text", "input_file"], errors="ignore")
+        yield pd.concat([keys, out], axis=1)

@@ -210,6 +210,61 @@ def test_extract_row_error_contract(monkeypatch):
     assert res["extract_error"] == "ValueError: bad page"
 
 
+def test_adapter_batch_shapes():
+    """The one Arrow adapter on the three batch shapes it serves: the
+    transcript columns, the same plus input_file, and the dedup path's
+    (h, text). Each row carries extract_row(text, ""), its pass-through
+    columns unchanged, its UTF-8 byte sizes, and input_file (NULL when
+    the batch has none), in the column order Spark's schema declares."""
+    import datetime as dt
+
+    import pandas as pd
+    from snacktory_spark.pipeline.extract_job import _DEDUP_SCHEMA
+    from snacktory_spark.schema import EXTRACT_SCHEMA, EXTRACTED_SCHEMA
+    from snacktory_spark.udf import extract_map_in_pandas, extract_row
+
+    texts = ["<html><head><title>Größe ✓</title></head><body><p>"
+             + "Ein Absatz mit genug Text für den Extraktor. " * 8
+             + "</p></body></html>",
+             "plain text, no markup: naïve café",
+             "<p>short</p>"]
+    ts = pd.Timestamp(dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc))
+    transcript = pd.DataFrame({
+        "conv_id": ["c0", "c1", "c2"], "turn_idx": [0, 1, 2],
+        "role": ["tool", "user", "assistant"], "tool": ["fetch", "", ""],
+        "ts": [ts, ts, pd.NaT], "text": texts},
+        index=[7, 8, 9])  # a non-default index, as a sliced batch has
+    with_file = transcript.assign(input_file=["f0", "f1", "f2"])
+    dedup = pd.DataFrame({"h": ["h0", "h1", "h2"], "text": texts},
+                         index=[3, 4, 5])
+    transcript_cols = EXTRACTED_SCHEMA.fieldNames()
+    for batch, cols in ((transcript, transcript_cols),
+                        (with_file, transcript_cols),
+                        (dedup, _DEDUP_SCHEMA.fieldNames())):
+        (out,) = list(extract_map_in_pandas(iter([batch])))
+        assert list(out.columns) == cols
+        assert len(out) == len(batch)
+        for i, (_, row) in enumerate(batch.iterrows()):
+            got = out.iloc[i]
+            want = extract_row(row["text"], "")
+            for f in EXTRACT_SCHEMA.fields:
+                if f.name == "date":
+                    assert (pd.isna(got["date"]) if want["date"] is None
+                            else got["date"] == pd.Timestamp(want["date"]))
+                else:
+                    assert got[f.name] == want[f.name], f.name
+            for c in batch.columns.drop(["text", "input_file"],
+                                        errors="ignore"):
+                assert (got[c] == row[c]
+                        or (pd.isna(got[c]) and pd.isna(row[c]))), c
+            assert got["input_bytes"] == len(row["text"].encode("utf-8"))
+            assert got["output_bytes"] == len(want["text"].encode("utf-8"))
+            if "input_file" in batch.columns:
+                assert got["input_file"] == row["input_file"]
+            else:
+                assert got["input_file"] is None
+
+
 def test_kill_mid_job_resume_completes(spark, synth_dir, tmp_path,
                                       monkeypatch):
     """North-rule contract: a job killed between waves resumes idempotently.
@@ -409,14 +464,14 @@ def test_sink_compaction(spark, synth_dir, tmp_path):
 
 
 def test_dedup_extract_matches_plain(spark, synth_dir, tmp_path):
-    """dedup_texts extracts each distinct text once and joins results back:
-    output must equal the plain path row for row (including lineage), and
-    the distinct stage must see exactly one row per unique text."""
+    """extracted_dedup_df extracts each distinct text once and joins
+    results back: output must equal the plain path row for row, and on
+    heavy duplication every row gets the one extraction and its byte
+    size."""
     from pyspark.sql import functions as F
     from snacktory_spark.pipeline.extract_job import (extracted_dedup_df,
                                                       extracted_df,
-                                                      read_transcripts,
-                                                      run_extract)
+                                                      read_transcripts)
 
     df = read_transcripts(spark, f"{synth_dir}/transcripts.parquet")
     cols = [c for c in extracted_df(df).columns if c != "input_file"]
@@ -425,7 +480,7 @@ def test_dedup_extract_matches_plain(spark, synth_dir, tmp_path):
     assert dedup.exceptAll(plain).count() == 0
     assert plain.exceptAll(dedup).count() == 0
 
-    # end-to-end through run_extract with heavy duplication
+    # heavy duplication: 120 rows, one text
     import pyarrow as pa
     import pyarrow.parquet as pq
     html = ("<html><head><title>Dup</title></head><body><div class='article-body'>"
@@ -442,12 +497,13 @@ def test_dedup_extract_matches_plain(spark, synth_dir, tmp_path):
         "tool": pa.array([""] * n, pa.string()),
         "ts": pa.array([None] * n, pa.timestamp("us", tz="UTC")),
     }), src)
-    out = str(tmp_path / "dedup_out")
-    m = run_extract(spark, src, out, n_buckets=2, dedup_texts=True, resume=False)
-    assert m["output_rows"] == n
-    got = spark.read.parquet(out)
+    got = extracted_dedup_df(read_transcripts(spark, src)).cache()
+    assert got.count() == n
     assert got.filter(F.col("title") == "Dup").count() == n
     assert got.select("text").distinct().count() == 1
+    assert got.filter((F.col("input_bytes") != len(html.encode("utf-8")))
+                      | F.col("input_file").isNull()).count() == 0
+    got.unpersist()
 
 
 def test_sink_salt_independent_of_bucket(spark, synth_dir, tmp_path):
@@ -513,22 +569,6 @@ def test_manifest_read_failure_fails_the_run(spark, synth_dir, tmp_path,
         run_extract(spark, f"{synth_dir}/transcripts.parquet", out,
                     n_buckets=4, resume=False)
     assert load_manifest(out) == {}
-
-
-def test_dedup_and_compaction_compose(spark, synth_dir, tmp_path):
-    """dedup_texts + the bucket-clustered sink together: distinct-text
-    extraction, at most k = ceil(n / buckets) files per bucket, full row
-    fan-back."""
-    import glob
-    from snacktory_spark.pipeline.extract_job import run_extract
-
-    out = str(tmp_path / "out_combo")
-    m = run_extract(spark, f"{synth_dir}/transcripts.parquet", out,
-                    n_buckets=4, dedup_texts=True, resume=False)
-    assert m["output_rows"] > 0 and m["waves"] == 1
-    k = math.ceil(2 * spark.sparkContext.defaultParallelism / 4)
-    assert all(len(glob.glob(f"{out}/bucket={b}/*.parquet")) <= k
-               for b in range(4))
 
 
 def test_pyfiles_zip_is_content_addressed(tmp_path, monkeypatch):
