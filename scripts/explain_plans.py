@@ -6,19 +6,28 @@ exactly one exchange in the extraction query (extracted_df)."""
 from __future__ import annotations
 
 import io
+import os
+import re
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = "/root/testdata/sf0.01"
 
 
 def plan_of(df) -> str:
+    """The formatted plan with the RDD and exchange ids
+    (`MapPartitionsRDD[129]`, `plan_id=2949`) and this checkout's path
+    written as constants: they count what the Spark session ran before, so
+    without this two runs, or two checkouts, print one plan differently."""
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain("formatted")
-    return buf.getvalue()
+    plan = re.sub(r"RDD\[\d+\]", "RDD[N]", buf.getvalue())
+    plan = re.sub(r"plan_id=\d+", "plan_id=N", plan)
+    return plan.replace(f"file:{ROOT}/", "file:<repo>/")
 
 
 def main():
@@ -35,7 +44,8 @@ def main():
     sections = []
 
     # 1. the extraction pipeline: scan → gate (pushed) → ONE exchange → UDF
-    tdf = read_transcripts(spark, "/root/repo/data/synth/sf0.01/transcripts.parquet")
+    tdf = read_transcripts(
+        spark, os.path.join(ROOT, "data", "synth", "sf0.01", "transcripts.parquet"))
     sections.append(("extraction pipeline (extracted_df)", plan_of(extracted_df(tdf)),
                      "One Exchange (the salted repartition); the text-nonnull "
                      "gate shows as PushedFilters IsNotNull(text) at the scan; "
@@ -299,8 +309,6 @@ def main():
     # universal gate (tests/test_plan_shapes.py) enforces, plus the
     # shuffle/join/python-stage counts a scale review reads first.
     # ------------------------------------------------------------------
-    import re
-
     def signature(name: str, plan: str) -> dict:
         # formatted explain puts the node as "Exchange (n)" and the
         # partitioning on a separate "Arguments:" line — match both
@@ -345,7 +353,7 @@ def main():
             f"{s['python']} | {s['windows']} | {s['wgl']} | "
             f"{s['topk']} | {gate} |")
 
-    with open("/root/repo/BENCH/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "BENCH", "PLANS.md"), "w") as f:
         f.write("# Physical plans of the headline queries\n\n"
                 "Generated by scripts/explain_plans.py (local[4], AQE on).\n"
                 "\n## Registry-wide plan audit (all registered queries)\n\n"

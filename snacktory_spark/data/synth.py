@@ -227,6 +227,28 @@ def sf_from_dir(sf_dir: str) -> float:
     return 0.01
 
 
+EXTRACTION_SCALARS = ["title", "text", "author_name", "raw_author_name",
+                      "author_description", "language", "description",
+                      "canonical_url", "domain", "top_private_domain",
+                      "image_url", "favicon_url", "video_url", "rss_url",
+                      "type", "sitename"]
+
+
+def extraction_row(res: dict | None) -> dict:
+    """One expected_extraction.parquet row without its keys. EVERY JResult
+    field is oracled (VERDICT r1 missing #2): scalar fields verbatim, the
+    date as format_date_utc, list fields as deterministic '|'-joined
+    serializations. `res` None (empty text, or extract raised) is the
+    failed row."""
+    row = {f: res[f] if res else "" for f in EXTRACTION_SCALARS}
+    row["date_str"] = format_date_utc(res["date"]) if res else None
+    row["keywords_str"] = "|".join(res["keywords"]) if res else ""
+    row["images_str"] = "|".join(im["src"] for im in res["images"]) if res else ""
+    row["links_str"] = "|".join(l["url"] for l in res["links"]) if res else ""
+    row["extract_ok"] = bool(res)
+    return row
+
+
 def synth_dir_for(sf_dir: str, root: str = "/root/repo/data/synth") -> str:
     return os.path.join(root, os.path.basename(os.path.normpath(sf_dir)) or "sf0.01")
 
@@ -328,32 +350,15 @@ def generate(out_dir: str, sf: float = 0.01, seed: int = 42,
         return out_dir
 
     # full local (single-node) extraction = oracle for the distributed run.
-    # EVERY JResult field is oracled (VERDICT r1 missing #2): scalar fields
-    # verbatim, list fields as deterministic '|'-joined serializations.
-    scalar_fields = ["title", "text", "author_name", "raw_author_name",
-                     "author_description", "language", "description",
-                     "canonical_url", "domain", "top_private_domain",
-                     "image_url", "favicon_url", "video_url", "rss_url",
-                     "type", "sitename"]
-    ext_rows = {f: [] for f in
-                ["conv_id", "turn_idx", *scalar_fields, "date_str",
-                 "keywords_str", "images_str", "links_str", "extract_ok"]}
+    ext_rows = {f: [] for f in ["conv_id", "turn_idx", *extraction_row(None)]}
     for cid, ti, text in zip(conv_ids, turn_idxs, texts):
         try:
             res = extract(text) if text else None
         except Exception:
             res = None
-        ext_rows["conv_id"].append(cid)
-        ext_rows["turn_idx"].append(ti)
-        for f in scalar_fields:
-            ext_rows[f].append(res[f] if res else "")
-        ext_rows["date_str"].append(format_date_utc(res["date"]) if res else None)
-        ext_rows["keywords_str"].append("|".join(res["keywords"]) if res else "")
-        ext_rows["images_str"].append(
-            "|".join(im["src"] for im in res["images"]) if res else "")
-        ext_rows["links_str"].append(
-            "|".join(l["url"] for l in res["links"]) if res else "")
-        ext_rows["extract_ok"].append(bool(res))
+        row = {"conv_id": cid, "turn_idx": ti, **extraction_row(res)}
+        for f, v in row.items():
+            ext_rows[f].append(v)
     ext_types = {"turn_idx": pa.int32(), "extract_ok": pa.bool_()}
     ext_table = pa.table({f: pa.array(v, ext_types.get(f, pa.string()))
                           for f, v in ext_rows.items()})

@@ -4,6 +4,8 @@ Pure python, no Spark — this is the scalar function that the Spark layer
 vectorizes over Arrow batches. Mirrors ArticleTextExtractor.extractContent
 (/root/reference .../ArticleTextExtractor.java:387-563):
 
+0. tag-free input with no url: the empty result plus the regex date,
+   without the cascade below (`extract` says why that is exact)
 1. parse → metadata cascades (title/description/canonical/domain/author/date)
 2. destructive cleaning (scripts/styles, TO_REMOVE, per-domain kill lists)
 3. candidate scoring + best-first election with retry
@@ -15,6 +17,8 @@ vectorizes over Arrow batches. Mirrors ArticleTextExtractor.extractContent
 """
 
 from __future__ import annotations
+
+import re
 
 from . import constants as C
 from .author import cleanup as author_cleanup, extract_author_description, extract_author_name
@@ -61,6 +65,11 @@ def empty_result(url: str = "") -> dict:
     }
 
 
+# a character that can put a digit into the serialized document: a Unicode
+# Nd digit itself, or an `&` that may decode to one (`&#50;`)
+_DATE_HINT = re.compile(r"[\d&]")
+
+
 def extract(html: str, url: str = "", max_content_size: int = 0,
             extract_images: bool = True,
             formatter: OutputFormatter | None = None,
@@ -70,14 +79,54 @@ def extract(html: str, url: str = "", max_content_size: int = 0,
     `formatter` mirrors setOutputFormatter (:378): it replaces the default
     fallback formatter; per-domain formatters still take precedence (:600).
     `heuristics` mirrors the setUnlikely/setPositive/setNegative/setToRemove
-    tunables (:329-377) — see snacktory_spark.heuristics."""
+    tunables (:329-377) — see snacktory_spark.heuristics.
+
+    Tag-free input with no url (most chat turns) skips the DOM cascade:
+    the result is `empty_result(url)` plus, when the text holds a digit
+    (`\\d`, Unicode Nd) or an `&`, the full path's own date step on a
+    fresh parse. This equals `_extract_document` exactly, because
+    - without `<` the tokenizer emits only text into html/head/body, so
+      there is no candidate (get_nodes wants p/div/td/h1/h2/article/
+      section) and no metadata element (title, meta, link, time). With no
+      url there is no per-domain element, domain or url date either.
+      `text` falls back to `description`, which is "", and neither the
+      empty-text retry (the document stays pristine) nor the malformed-
+      HTML retry ("" has no tags) fires;
+    - the serializer escapes only `&`, `<` and `>`, and only to named
+      entities (dom._escape_text), so a text with no `\\d` and no `&`
+      serializes without a digit, and every DATE_PATTERNS entry needs
+      `\\d` (dates.py), so the regex date step finds nothing;
+    - extract_images, max_content_size, formatter and heuristics have no
+      element to act on.
+    tests/test_extract_shortcut.py checks this against `_extract_document`
+    with hypothesis."""
+    html = _capped(html)
+    if url or "<" in html:
+        return _extract_document(html, url, max_content_size, extract_images,
+                                 formatter, heuristics)
     res = empty_result(url)
+    if _DATE_HINT.search(html):
+        res["date"] = extract_date_from_document(dom_parse(html, url), url)
+    return res
+
+
+def _capped(html: str) -> str:
     if not html:
         raise ValueError("html string is empty!?")
     # input byte-cap analog of Converter.java:36,:135-148
     if len(html) > C.MAX_INPUT_BYTES:
         html = utf8_truncate(html, C.MAX_INPUT_BYTES)
+    return html
 
+
+def _extract_document(html: str, url: str = "", max_content_size: int = 0,
+                      extract_images: bool = True,
+                      formatter: OutputFormatter | None = None,
+                      heuristics=None) -> dict:
+    """`extract` without the tag-free shortcut: parse, then the metadata,
+    scoring and retry cascade on every input."""
+    html = _capped(html)
+    res = empty_result(url)
     doc = dom_parse(html, url)
     result = _extract_retrying(res, doc, html, extract_images, max_content_size,
                                formatter, heuristics)
@@ -105,10 +154,12 @@ def _extract_retrying(res: dict, doc: Document, html: str, extract_images: bool,
     re-parse the original html on the empty-text retry instead — same
     tree (parsing is deterministic), no per-document deep copy. When the
     first pass left the document PRISTINE (no version bump AND no
-    internal-scratchpad writes — common for plain-text turns, where no
-    candidate is ever scored), the retry reuses the document directly:
-    it is bit-identical to what the re-parse would produce, and parsing
-    is ~a quarter of per-document time (BENCH/extract_profile.md).
+    internal-scratchpad writes — markup with no p/div/td/h1/h2/article/
+    section element, or tag-free text with a url, where no candidate is
+    ever scored; tag-free text without a url never gets here, see
+    `extract`), the retry reuses the document directly: it is
+    bit-identical to what the re-parse would produce, and parsing is ~a
+    quarter of per-document time (BENCH/extract_profile.md).
     """
     v0, w0 = doc.version, doc.internal_writes
     result = _extract_content(res, doc, extract_images, max_content_size, True,

@@ -6,6 +6,11 @@ batch in → per-row pure-python extraction (module-level compiled regex/rule
 tables, warm per worker like the reference's static Patterns) → Arrow batch
 out. No per-row Python dispatch from the JVM.
 
+Rows reach `extract(text, "")` with no url, so a tag-free turn (plain chat
+text) takes extract's exact shortcut: the empty result plus the regex
+date, with no DOM cascade. What such a row still costs here is the Arrow
+hop and this adapter, not extraction.
+
 Failure policy for web-scale runs: a row that throws yields an empty result
 with extract_ok=false + extract_error, never a task failure.
 """

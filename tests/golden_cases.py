@@ -200,6 +200,76 @@ GOLDEN_CASES = [
         "fixture": "src/test/resources/de/jetwick/snacktory/spiegel.html",
         "text_start": "Da ist er wieder, der C64: Eigentlich längst ein Relikt der Technikgeschichte, soll der ",
     },
+    # The ten committed pages below carry the assertions that
+    # data/synth/sf0.001/expected.parquet keys by their fixture.
+    {
+        "name": "heise",
+        "fixture": "src/test/resources/de/jetwick/snacktory/heise.html",
+        "title": "Internet Explorer 9 jetzt mit schnellster JavaScript-Engine",
+        "text_start": "Microsoft hat heute eine siebte Platform Preview des Internet Explorer veröffentlicht. In den nur dr",
+    },
+    {
+        "name": "techcrunch",
+        "fixture": "src/test/resources/de/jetwick/snacktory/techcrunch.html",
+        "title": "Twitter Finally Brings Advanced Search Out Of Purgatory; Updates Discovery Algorithms",
+        "text_start": "A couple weeks ago, we wrote a post wishing Twitter a happy fifth birthday, but also noting ",
+        "author": "MG Siegler",
+    },
+    {
+        "name": "twitter",
+        "fixture": "src/test/resources/de/jetwick/snacktory/twitter.html",
+        "title": "Twitter Engineering: Twitter Search is Now 3x Faster",
+        "text_start": "In the spring of 2010, the search team at Twitter started to rewrite our search engine in order to serve our ever-growin",
+    },
+    {
+        "name": "taz",
+        "fixture": "src/test/resources/de/jetwick/snacktory/taz.html",
+        "title": "Anti-Atomkraft? Nein danke!",
+        "text_start": "Absolute Minderheit: Im Shiba-Park in Tokio treffen sich jetzt jeden Sonntag die Atomkraftgegner. Sie blicken neidisch auf die Anti-AKW-Bewegung in Deutschland. ",
+        "author": "Georg Blume",
+    },
+    {
+        "name": "blogger",
+        "fixture": "src/test/resources/de/jetwick/snacktory/blogger.html",
+        "title": "The Brain Dump: Gavin King unveils Red Hat's Java killer successor: The Ceylon Project",
+        "text_start": "Gavin King of Red Hat/Hibernate/Seam fame recently",
+        "author": "Marc Richards",
+    },
+    {
+        "name": "huffingtonpost",
+        "fixture": "src/test/resources/de/jetwick/snacktory/huffingtonpost.html",
+        "title": "Federal Reserve's Low Rate Policy Is A 'Dangerous Gamble,' Says Top Central Bank Official",
+        "text_start": "A top regional Federal Reserve official sharply",
+        "author": "Shahien Nasiripour",
+    },
+    {
+        "name": "cnet1",
+        "fixture": "src/test/resources/de/jetwick/snacktory/cnet1.html",
+        "title": "Adobe to buy Omniture for $1.8 billion",
+        "text_start": "Adobe said on Tuesday",
+        "text_end": "earth-shattering thus far.",
+    },
+    {
+        "name": "adweek",
+        "fixture": "src/test/resources/de/jetwick/snacktory/adweek.html",
+        "title": "5 Digital Metrics/Tools That PR Pros Need to Know – Adweek",
+        "text_start": "Measurement: it is, as our own Shawn Paul Wood put it in yesterday’s “Top 5 PR Industry Debate Topics” post, the “pachyderm in the room.”",
+        "text_end": "Do we agree? How familiar are we with the data and tools Sullivan described?",
+        "author": "Patrick Coffee",
+    },
+    {
+        "name": "entrepreneur",
+        "fixture": "src/test/resources/de/jetwick/snacktory/entrepreneur.html",
+        "title": "7 Big Changes in the PR Landscape Every Business Should Know About",
+        "text_start": "At least three times a week, I get emails from entrepreneurs or small-business owners asking for advice on public relations.",
+        "author": "Rebekah Iliff",
+    },
+    {
+        "name": "applepr",
+        "fixture": "src/test/resources/de/jetwick/snacktory/applepr.html",
+        "title": "Apple Expands Capital Return Program to $200 Billion",
+        "text_start": "Apple Expands Capital Return Program to $200 Billion CUPERTINO, California—April 27, 2015—Apple",
+    },
 ]
 
 # Fixtures whose reference assertions our implementation does not meet,
