@@ -35,16 +35,17 @@ if _REPO_ROOT not in _sys.path:
 # code); the historical private names are kept as aliases so the 50
 # registered queries read unchanged.
 from snacktory_spark.pipeline.corpus_ops import (  # noqa: E402
-    corpus_gate_pred as _corpus_gate_pred,
     exact_substr_spans,
     exclusive_prefix_sum as _exclusive_prefix_sum,
+    gate_survivors as _gate_survivors,
     pack_sequences as _pack_sequences,
     seed_bench_grams as _seed_bench_grams,
     tokens_expr as _tokens_expr,
+    with_keeper as _with_keeper,
     zip_grams as _zip_grams,
 )
 
-SYNTH_ROOT = "/root/repo/data/synth"
+SYNTH_ROOT = _os.path.join(_REPO_ROOT, "data", "synth")
 SF001_DIR = f"{SYNTH_ROOT}/sf0.001"
 SF01_DIR = f"{SYNTH_ROOT}/sf0.01"   # driver correctness runs at sf=0.01
 
@@ -1402,7 +1403,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg reuses the clustering instead of adding a second exchange."""
     from pyspark.sql import functions as F
     docs = _split_scan(spark, f"{sf_dir}/documents.parquet", "doc_id")
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    toks = _tokens_expr()
     bench = (docs.filter(F.col("doc_id").isin(1, 2, 3))
              .filter(F.size(toks) >= 8)
              .select(F.xxhash64(F.slice(toks, 1, 8)).alias("gram"))
@@ -1465,7 +1466,7 @@ def q_doc_cross_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast, no window — survives 100x scale as-is."""
     from pyspark.sql import functions as F
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    toks = _tokens_expr()
     tok_docs = docs.select("doc_id", toks.alias("toks"))
     grams = F.when(
         F.size("toks") >= 5,
@@ -1521,7 +1522,7 @@ def q_doc_exact_substr(spark: SparkSession, sf_dir: str) -> DataFrame:
     100× as-is."""
     from pyspark.sql import functions as F
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    toks = _tokens_expr()
     tok_docs = (docs.filter(F.length("text") > 0)
                 .select("doc_id", toks.alias("toks")))
     return exact_substr_spans(tok_docs, W=5)
@@ -1590,7 +1591,7 @@ def _doc_repetition_over(docs: DataFrame) -> DataFrame:
     """doc_repetition body over an arbitrary (doc_id, text) frame —
     shared with the r10 equivalence tests."""
     from pyspark.sql import functions as F
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    toks = _tokens_expr()
     base = (docs.select("doc_id", toks.alias("toks"))
             .filter(F.size("toks") >= 2))
     grams = F.transform(F.sequence(F.lit(1), F.size("toks") - 1), _bigram_at)
@@ -1703,7 +1704,7 @@ def q_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange outweighs parallelizing the cheap chunk build — left as-is.)"""
     from pyspark.sql import Window, functions as F
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    toks = _tokens_expr()
     base = (docs.filter(F.length("text") > 0)
             .select("doc_id", toks.alias("toks")))
     n_chunks = F.floor((F.size("toks") + 2) / 3).cast("int")
@@ -1772,13 +1773,12 @@ def q_seq_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
       2. two-level exclusive prefix sum of per-doc counts within each
          source (corpus_ops.exclusive_prefix_sum, shared with
          q_token_pack), over the NARROW (source, doc_id, n) projection
-         only — token arrays never ride through its exchanges. Rows get
-         a doc_id range id from driver-sampled literal split points,
-         per-(pid, source) totals (≤ P×S tiny rows), per-source offsets
-         window over those totals, broadcast back, local per-(pid,
-         source) running sum — every doc learns its source-global start
-         offset without any single-task sort, even for a dominant source
-         (its docs span many ranges);
+         only. Rows get a doc_id range id from driver-sampled literal
+         split points, per-(pid, source) totals (≤ P×S tiny rows),
+         per-source offsets window over those totals, broadcast back,
+         local per-(pid, source) running sum — every doc learns its
+         source-global start offset without any single-task sort, even
+         for a dominant source (its docs span many ranges);
       2b. re-attach each doc's token array with a plain doc_id equi-join
          (uniform key, shuffled hash join — scale-safe);
       3. each doc emits one row per OVERLAPPED 128-token sequence
@@ -1791,12 +1791,9 @@ def q_seq_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     does not depend on exchange reuse or AQE."""
     from pyspark.sql import functions as F
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-    base = (docs.filter(F.length("text") > 0)
-            .select("source", "doc_id", toks.alias("toks"))
-            .withColumn("n", F.size("toks").cast("long")))
-    narrow = base.select("source", "doc_id", "n")
-    return _pack_sequences(base, narrow, "source", ["doc_id"], 128,
+    texts = (docs.filter(F.length("text") > 0)
+             .select("source", "doc_id", "text"))
+    return _pack_sequences(texts, "source", ["doc_id"], 128,
                            bounds_from=docs)
 
 
@@ -1814,31 +1811,28 @@ def q_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     expected_extraction.parquet (the extraction stage's own oracle).
 
     Stage shapes (the 100-TB audit is the sum of the proven parts):
-      1. extraction — one pushed-down scan, salted repartition by
-         (conv_id, turn_idx div 64) hash, MapInPandas (the audited
-         extract_turns plan; BENCH/skew_salt.md);
-      2. quality gate — narrow JVM HOF expressions over the extracted
-         text (token count, stopword ratio, bigram-repetition), zero
-         shuffles; thresholds pass 731/962 turns at sf0.01 — a real
-         24% attrition, not a vacuous gate;
-      3. exact dedup — one row_number window hash-partitioned on
-         md5(text) (uniform key, dup groups tiny; keeps the smallest
-         (conv_id, turn_idx));
+      1. extraction — the audited extract_turns plan (salted
+         repartition → MapInPandas; BENCH/skew_salt.md);
+      2-3. quality gate and exact dedup — corpus_ops.gate_survivors and
+         with_keeper, shared with run_corpus_prep; the gate passes
+         731/962 turns at sf0.01, a real 24% attrition;
       4. decontamination — the benchmark set is the first-8-token gram
-         of turn 0 of the 3 smallest conv_ids (bounded: 2 driver
-         collects of ≤3 rows, the documented seed pattern; the 3 seed
-         rows are extracted on the driver with extract_row, no UDF
-         stage). With the bench inlined as literals the check is a NARROW
+         of turn 0 of the 3 smallest conv_ids (corpus_ops
+         .seed_bench_grams: 2 bounded driver collects, no UDF stage).
+         With the bench inlined as literals the check is a NARROW
          arrays_overlap map — no explode, no join; the registered
-         decontaminate query keeps the broadcast-hash-join shape for
-         production-sized (~1e4-gram) bench sets;
-      5. packing — the seq_pack two-level prefix sum keyed by role,
-         ordered by (conv_id, turn_idx); tokens never transit a
-         shuffle as rows. Its split points are sampled from the raw
+         decontaminate query and the job keep the broadcast-hash-join
+         shape for production-sized (~1e4-gram) bench sets;
+      5. packing — corpus_ops.pack_sequences keyed by role, ordered by
+         (conv_id, turn_idx). Its split points are sampled from the raw
          transcripts scan (turn 0 rows, one per conv_id), never from
          the extracted chain, which the sample would run a second time.
+
+    Packing reads `clean` through three lineage branches; all three
+    share ONE extraction pass through AQE's ReusedExchange of the dedup
+    exchange (pack_sequences says why; a test asserts the reuse).
     """
-    from pyspark.sql import Window, functions as F
+    from pyspark.sql import functions as F
     from snacktory_spark.pipeline.extract_job import (extracted_df,
                                                       read_transcripts)
 
@@ -1846,50 +1840,13 @@ def q_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     SEQ = 128
     sdir = _synth(sf_dir)
     tr = read_transcripts(spark, f"{sdir}/transcripts.parquet")
-
-    # stage 4's bench set: turn 0 of the 3 smallest conv_ids, extracted
-    # on the driver with extract_row (two bounded collects) — the shared
-    # seed builder, also used by run_corpus_prep's equality tests so
-    # query and job decontaminate against identical grams
     bench_grams = _seed_bench_grams(tr)
 
-    # stages 1-4 are built as EXPRESSIONS over (role, conv_id, turn_idx,
-    # text) — no intermediate toks/n columns survive past any exchange.
-    # Why: the packing stage consumes `clean` through THREE lineage
-    # branches (token-carrying base, narrow prefix-sum totals, narrow
-    # cumsum).
-    # Extraction is the expensive stage, so all three branches must
-    # share ONE physical execution of it — which AQE's ReusedExchange
-    # grants only if the dedup exchange's subtree is byte-identical in
-    # every branch. Carrying the same 4 columns through stage 3's
-    # md5-hash exchange in all branches makes per-branch column pruning
-    # produce the same subtree; toks/n are recomputed ABOVE the reused
-    # exchange (narrow per-row work over already-shuffled rows). A test
-    # asserts the executed plan contains the ReusedExchange.
-    # The SHARED tokenizer expression (corpus_ops.tokens_expr): every
-    # stage of the chain — and the production job — must tokenize
-    # identically or survivors drift between stages (r9 review finding:
-    # this line was the one remaining inline copy).
-    toks = _tokens_expr()
+    deduped = (_with_keeper(_gate_survivors(extracted_df(tr, lineage=False)))
+               .filter("is_keeper").drop("is_keeper"))
 
-    # stage 1 (extraction survivors) + stage 2 (quality gate: token
-    # count, stopword ratio, bigram repetition — narrow JVM HOFs via
-    # the shared corpus_ops.corpus_gate_pred; the forall(array(·))
-    # wrapper is a let-binding so the tokenization runs ONCE per row)
-    gated = (extracted_df(tr, lineage=False)
-             .filter(F.col("extract_ok") & (F.length("text") > 0))
-             .select("role", "conv_id", "turn_idx", "text")
-             .filter(F.forall(F.array(toks), _corpus_gate_pred())))
-
-    # stage 3: exact dedup — keep the smallest (conv_id, turn_idx) per
-    # content hash; one hash-partitioned exchange on a uniform key
-    w_dup = (Window.partitionBy(F.md5("text"))
-             .orderBy("conv_id", "turn_idx"))
-    deduped = (gated.withColumn("_rn", F.row_number().over(w_dup))
-               .filter(F.col("_rn") == 1).drop("_rn"))
-
-    # stage 4: decontamination — narrow arrays_overlap vs the bounded
-    # literal bench-gram set (see docstring; same let-binding trick)
+    # stage 4: narrow arrays_overlap vs the literal bench-gram set; the
+    # forall(array(·)) wrapper binds the tokens once per row
     if bench_grams:
         bench_lit = F.array(*[F.lit(g) for g in bench_grams])
 
@@ -1901,21 +1858,13 @@ def q_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).otherwise(F.array().cast("array<string>"))
             return ~F.arrays_overlap(grams8, bench_lit)
 
-        clean = deduped.filter(F.forall(F.array(toks), decontam_pred))
+        clean = deduped.filter(F.forall(F.array(_tokens_expr()),
+                                        decontam_pred))
     else:
         clean = deduped
 
-    # stage 5: fixed-length sequence packing keyed by role (the shared
-    # _pack_sequences two-level prefix sum; see q_seq_pack's docstring
-    # for why the prefix sum runs on the NARROW projection). Split
-    # points come from the raw scan's turn-0 rows, one per conv_id.
-    base = (clean.withColumn("toks", toks)
-            .withColumn("n", F.size("toks").cast("long"))
-            .select("role", "conv_id", "turn_idx", "toks", "n"))
-    narrow = clean.select("role", "conv_id", "turn_idx",
-                          F.size(toks).cast("long").alias("n"))
     return _pack_sequences(
-        base, narrow, "role", ["conv_id", "turn_idx"], SEQ,
+        clean, "role", ["conv_id", "turn_idx"], SEQ,
         bounds_from=tr.filter(F.col("turn_idx") == 0).select("conv_id"))
 
 
@@ -1943,7 +1892,7 @@ def q_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (top-k never sorts the full vocabulary)."""
     from pyspark.sql import functions as F
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    toks = _tokens_expr()
     return (docs.filter(F.length("text") > 0)
             .select(F.explode(toks).alias("token"))
             .groupBy("token")
@@ -1972,7 +1921,7 @@ def q_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
     K, W = 4, 4
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    toks = _tokens_expr()
     base = (docs.filter(F.length("text") > 0)
             .select("doc_id", toks.alias("toks"))
             .filter(F.size("toks") >= K + W - 1))
@@ -2029,7 +1978,7 @@ def q_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash aggs; one explode."""
     from pyspark.sql import functions as F
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    toks = _tokens_expr()
     pairs = (docs.filter(F.length("text") > 0)
              .select("doc_id", "lang", F.explode(toks).alias("token")))
     ref = pairs.filter(F.col("doc_id") < 50)
@@ -2104,7 +2053,7 @@ def q_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle. Rounded to 6 decimals for cross-engine float stability."""
     from pyspark.sql import Window, functions as F
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    toks = _tokens_expr()
     pairs = (docs.filter(F.length("text") > 0)
              .select("doc_id", F.explode(toks).alias("token")))
     tf = pairs.groupBy("doc_id", "token").agg(F.count("*").alias("tf"))
@@ -2156,7 +2105,7 @@ def q_bm25_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     term."""
     from pyspark.sql import functions as F
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    toks = _tokens_expr()
     base = docs.filter(F.length("text") > 0)
     dl = base.select("doc_id", F.size(toks).alias("dl"))
     n_docs = docs.filter(F.col("n_chars") > 0).select("n_chars").count()

@@ -17,9 +17,10 @@ signatures.
 from __future__ import annotations
 
 import random
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 VOCAB_SIZE = 4000
 DOC_TOKENS = 80

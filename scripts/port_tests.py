@@ -16,7 +16,7 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from snacktory_spark.converter import read_file_as_string
 from snacktory_spark.dates import format_date_utc, parse_with_patterns, _tokenize_java_pattern

@@ -13,11 +13,12 @@ Usage: python scripts/pq_recall.py
 
 from __future__ import annotations
 
+import os
 import sys
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 N_SUB, SUB_DIM = 4, 16
 K_LIST = (1, 10)

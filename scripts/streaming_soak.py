@@ -40,7 +40,7 @@ import time
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 BASE = dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc)
 N_CONVS = 5

@@ -113,8 +113,12 @@ def extract(html: str, url: str = "", max_content_size: int = 0,
 def _capped(html: str) -> str:
     if not html:
         raise ValueError("html string is empty!?")
-    # input byte-cap analog of Converter.java:36,:135-148
-    if len(html) > C.MAX_INPUT_BYTES:
+    # input byte-cap analog of Converter.java:36,:135-148. A character
+    # is at most 4 UTF-8 bytes, so a short turn pays one len(); the byte
+    # count is utf8_truncate's (a lone surrogate counts 3 bytes)
+    if (len(html) > C.MAX_INPUT_BYTES // 4
+            and len(html.encode("utf-8", "surrogatepass"))
+            > C.MAX_INPUT_BYTES):
         html = utf8_truncate(html, C.MAX_INPUT_BYTES)
     return html
 

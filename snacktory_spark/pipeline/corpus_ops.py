@@ -1,11 +1,11 @@
 """Shared corpus-prep expression machinery (round 9).
 
-These builders were born inside ``__spark_entry__.py``'s registered
-queries (q_corpus_prep / q_seq_pack / q_token_pack) and moved here so the
-production job (`corpus_prep_job.run_corpus_prep`) and the oracled query
-provably execute the SAME code — the round-8 review already showed that
-two hand-kept copies of plan-shape-sensitive machinery drift
-(`_pack_sequences` consolidation); a job/query split would reopen that.
+The stages of the corpus-prep chain — the quality gate
+(`gate_survivors`), the exact-dedup keeper election (`with_keeper`) and
+the packer (`pack_sequences`) — live here once, so the production job
+(`corpus_prep_job.run_corpus_prep`) and the oracled queries
+(q_corpus_prep / q_seq_pack / q_token_pack) execute the SAME code: two
+hand-kept copies of plan-shape-sensitive machinery drift.
 ``__spark_entry__`` imports them back under its historical private names.
 
 Everything here builds JVM-side Catalyst expressions (higher-order
@@ -92,6 +92,32 @@ def corpus_gate_pred(stopwords=DEFAULT_STOPWORDS, min_tokens: int = 30,
                 & (dupf <= max_bigram_dup))
 
     return pred
+
+
+def gate_survivors(extracted: DataFrame, min_tokens: int = 30,
+                   min_stopword_ratio: float = 0.01,
+                   max_bigram_dup: float = 0.1) -> DataFrame:
+    """Stages 1-2 of the chain: the extraction survivors (`extract_ok`,
+    non-empty text) as (role, conv_id, turn_idx, text), passed through
+    the `corpus_gate_pred` quality gate — narrow JVM HOFs, zero
+    shuffles. No toks/n column leaves this frame: the packer recomputes
+    them above the dedup exchange (see pack_sequences)."""
+    return (extracted
+            .filter(F.col("extract_ok") & (F.length("text") > 0))
+            .select("role", "conv_id", "turn_idx", "text")
+            .filter(F.forall(F.array(tokens_expr()),
+                             corpus_gate_pred(
+                                 min_tokens=min_tokens,
+                                 min_stopword_ratio=min_stopword_ratio,
+                                 max_bigram_dup=max_bigram_dup))))
+
+
+def with_keeper(gated: DataFrame) -> DataFrame:
+    """Stage 3, exact dedup: adds `is_keeper`, true for the smallest
+    (conv_id, turn_idx) per md5(text). One row_number window
+    hash-partitioned on a uniform key; duplicate groups are tiny."""
+    w = Window.partitionBy(F.md5("text")).orderBy("conv_id", "turn_idx")
+    return gated.withColumn("is_keeper", F.row_number().over(w) == 1)
 
 
 def seed_bench_grams(tr: DataFrame, gram_width: int = 8,
@@ -214,21 +240,35 @@ def exclusive_prefix_sum(narrow: DataFrame, group_col: str, order_cols,
                     .alias("gstart")))
 
 
-def pack_sequences(base: DataFrame, narrow: DataFrame, group_col: str,
-                   order_cols, seq_len: int, *,
-                   bounds_from: DataFrame) -> DataFrame:
-    """Fixed-length packing: each group's token arrays, concatenated in
-    `order_cols` order, are cut into `seq_len`-token sequences; emits
-    per-sequence token count and boundary tokens. Shared by q_seq_pack,
-    q_corpus_prep stage 5 and run_corpus_prep.
+def pack_sequences(texts: DataFrame, group_col: str, order_cols,
+                   seq_len: int, *, bounds_from: DataFrame) -> DataFrame:
+    """Fixed-length packing: each group's `tokens_expr` tokens of
+    `text`, concatenated in `order_cols` order, are cut into
+    `seq_len`-token sequences; emits per-sequence token count and
+    boundary tokens. Shared by q_seq_pack, q_corpus_prep stage 5 and
+    run_corpus_prep.
 
-    `base` carries (group_col, *order_cols, toks, n); `narrow` the same
-    minus toks — the prefix sum (exclusive_prefix_sum, which documents
-    `bounds_from`) runs on `narrow` only, so token arrays never ride
-    through its exchanges. Each row's global start offset then rejoins
-    its tokens on order_cols, explodes to the ~n/seq_len sequences it
-    overlaps, and a hash agg on (group, seq_idx) sums them."""
+    `texts` carries (group_col, *order_cols, text). Two frames are
+    built from it: `base` with the token array and its size (toks, n)
+    and `narrow` with the size only. The prefix sum
+    (exclusive_prefix_sum, which documents `bounds_from`) runs on
+    `narrow`, so token arrays never ride through its exchanges. Both
+    frames tokenize ABOVE whatever exchange produced `texts`: when
+    `texts` ends in a shuffle (q_corpus_prep's md5 dedup exchange), the
+    subtree below it is byte-identical in every branch, so AQE reuses
+    that exchange and the expensive extraction runs once; a toks/n
+    column carried through the exchange would differ per branch after
+    column pruning and defeat the reuse. Each row's global start offset
+    then rejoins its tokens on order_cols, explodes to the ~n/seq_len
+    sequences it overlaps, and a hash agg on (group, seq_idx) sums
+    them."""
     order_cols = list(order_cols)
+    keys = [group_col, *order_cols]
+    toks = tokens_expr()
+    base = (texts.withColumn("toks", toks)
+            .withColumn("n", F.size("toks").cast("long"))
+            .select(*keys, "toks", "n"))
+    narrow = texts.select(*keys, F.size(toks).cast("long").alias("n"))
     starts = exclusive_prefix_sum(narrow, group_col, order_cols,
                                   bounds_from=bounds_from)
     g = base.join(starts.select(*order_cols, "gstart"), order_cols)

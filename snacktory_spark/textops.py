@@ -25,6 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .pipeline.corpus_ops import tokens_expr, zip_grams
+
 N_MINHASH = 8          # permutations (salts 0..7)
 N_BANDS = 4            # LSH bands of 2 rows each
 SHINGLE_WORDS = 3
@@ -33,10 +35,6 @@ EN_STOP = ["the", "of", "and", "to", "a", "in", "is", "it", "that", "for"]
 ES_STOP = ["el", "la", "de", "que", "y", "en", "un", "los", "se", "por"]
 DE_STOP = ["der", "die", "und", "das", "nicht", "von", "sie", "ist", "des", "ein"]
 FR_STOP = ["le", "la", "et", "les", "des", "en", "un", "du", "une", "que"]
-
-
-def tokens_col(text_col="text"):
-    return F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
 
 
 def shingles_col(text_col="text", k: int = SHINGLE_WORDS):
@@ -51,9 +49,7 @@ def shingles_col(text_col="text", k: int = SHINGLE_WORDS):
     corpus-prep near-dedup stage) before this r9 fix, linear after
     (same strings: concat_ws(" ") over never-null split tokens equals
     the zip_with concat chain)."""
-    from .pipeline.corpus_ops import zip_grams
-
-    toks = tokens_col(text_col)
+    toks = tokens_expr(text_col)
     n = F.size(toks)
     m = F.greatest(n - (k - 1), F.lit(0)).cast("int")
     return F.when(n >= k, zip_grams(toks, k, m)) \
@@ -164,7 +160,7 @@ def simhash64(text_col="text"):
     representable in double) — needed because the Python shiftleft/right
     wrappers only accept literal shift amounts.
     """
-    toks = F.array_distinct(tokens_col(text_col))
+    toks = F.array_distinct(tokens_expr(text_col))
     hashes = F.transform(
         toks, lambda x: F.conv(F.substring(F.md5(x), 1, 15), 16, 10).cast("long"))
     bit_idx = F.sequence(F.lit(0), F.lit(59))
@@ -186,7 +182,7 @@ def simhash64(text_col="text"):
 def quality_features(docs: DataFrame, id_col="doc_id", text_col="text") -> DataFrame:
     """Heuristic quality scores: length, token, letter/punct/stopword ratios."""
     text = F.col(text_col)
-    toks = tokens_col(text_col)
+    toks = tokens_expr(text_col)
     n_chars = F.length(text)
     n_letters = F.length(F.regexp_replace(text, r"[^A-Za-z]", ""))
     n_punct = F.length(F.regexp_replace(text, r"[^.,;:!?]", ""))
@@ -204,7 +200,7 @@ def quality_features(docs: DataFrame, id_col="doc_id", text_col="text") -> DataF
 
 def language_id(docs: DataFrame, id_col="doc_id", text_col="text") -> DataFrame:
     """Stopword-lexicon language guess (en/es/de/fr/unknown)."""
-    toks = tokens_col(text_col)
+    toks = tokens_expr(text_col)
 
     def stop_hits(sw):
         return F.size(F.filter(toks, lambda x: x.isin(*sw)))

@@ -12,11 +12,13 @@ negative and the k=16/256 codebook columns): BENCH/pq_recall.md,
 regenerated by scripts/pq_recall.py.
 """
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo/scripts")
+from conftest import REPO  # noqa: E402
+sys.path.insert(0, os.path.join(REPO, "scripts"))
 
 pytestmark = pytest.mark.usefixtures()
 

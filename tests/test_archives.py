@@ -3,14 +3,11 @@ cross-validation both directions, hostile input, fuzz.
 See snacktory_spark/archives.py."""
 import io
 import struct
-import sys
 import tarfile
 import zipfile
 
 import pytest
 from hypothesis import given, settings, strategies as st
-
-sys.path.insert(0, "/root/repo")
 
 from snacktory_spark.archives import (build_tar, build_zip, tar_info,
                                       zip_info)

@@ -4,13 +4,10 @@ sampling, hostile input (truncated/bomb/unsupported), fuzz."""
 import shutil
 import struct
 import subprocess
-import sys
 
 import numpy as np
 import pytest
 from hypothesis import given, settings, strategies as st
-
-sys.path.insert(0, "/root/repo")
 
 from snacktory_spark.av import (MAX_AUDIO_SAMPLES, audio_features,
                                 decode_wav, encode_wav, encode_y4m,

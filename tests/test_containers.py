@@ -1,12 +1,9 @@
 """MP4/Ogg/FLAC container scanner tests: build→info round-trips,
 header arithmetic, hostile input, fuzz. See snacktory_spark/containers.py."""
 import struct
-import sys
 
 import pytest
 from hypothesis import given, settings, strategies as st
-
-sys.path.insert(0, "/root/repo")
 
 from snacktory_spark.containers import (build_flac, build_mp4, build_ogg,
                                         flac_info, mp4_info, ogg_info)

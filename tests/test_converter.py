@@ -1,11 +1,7 @@
 """Port of ConverterTest.java:31-84 — charset detection on the reference's
 own fixture pages, plus the byte-cap title test."""
 
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from snacktory_spark.converter import MAX_BYTES, bytes_to_string, resolve_encoding
 

@@ -7,15 +7,14 @@ Uses sf0.001 synth data."""
 import glob
 import os
 import shutil
-import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+from conftest import REPO  # noqa: E402
 
 from snacktory_spark.data.synth import generate  # noqa: E402
 
-SYNTH = "/root/repo/data/synth/sf0.001"
+SYNTH = os.path.join(REPO, "data", "synth", "sf0.001")
 
 
 @pytest.fixture(scope="module")
@@ -74,7 +73,7 @@ def test_job_equals_oracled_query_and_resumes(spark, synth_dir, bench_path,
     # packed output equals the oracled single-query chain exactly
     import importlib.util
     spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", "/root/repo/__spark_entry__.py")
+        "__spark_entry__", os.path.join(REPO, "__spark_entry__.py"))
     em = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(em)
     q_rows = sorted(tuple(r) for r in

@@ -2,10 +2,6 @@
 ArticleTextExtractor.java:1796-1893 gets a round-trip case, plus cleanDate
 fixups and the DateUtils body-regex families."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from snacktory_spark.dates import (clean_date, extract_date_using_regex,
                                    format_date_utc, parse_date)
 

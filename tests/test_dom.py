@@ -1,9 +1,5 @@
 """Vendored DOM: parsing, jsoup text semantics, CSS-lite selectors."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from snacktory_spark.dom import parse
 from snacktory_spark.formatter import OutputFormatter
 

@@ -3,11 +3,8 @@ with full rule semantics (plain, wildcard, exception; longest match
 wins). Reference: Guava InternetDomainName.topPrivateDomain
 (ArticleTextExtractor.java:3336-3357). See snacktory_spark/domains.py
 for the documented divergence envelope."""
-import sys
 
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from snacktory_spark.domains import (extract_domain_name_without_tld,
                                      get_domain, public_suffix_length,

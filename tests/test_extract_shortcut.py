@@ -128,3 +128,13 @@ def test_shortcut_dates():
     assert extract("no date here & none")["date"] is None
     dated = extract("plain words", "http://example.com/2023/12/31/story.html")
     assert dated["date"] is not None
+
+
+def test_cap_counts_utf8_bytes():
+    """MAX_INPUT_BYTES caps UTF-8 bytes, not characters: 300,000 `é`
+    are 600,000 bytes, so the date after them is cut off on both
+    paths."""
+    text = "é" * 300000 + " 2023-12-31"
+    assert len(extractor._capped(text).encode("utf-8")) <= C.MAX_INPUT_BYTES
+    assert extract(text, "")["date"] is None
+    assert _extract_document(text, "")["date"] is None

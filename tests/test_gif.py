@@ -5,13 +5,10 @@ streams, hostile input, fuzz."""
 import shutil
 import struct
 import subprocess
-import sys
 
 import numpy as np
 import pytest
 from hypothesis import given, settings, strategies as st
-
-sys.path.insert(0, "/root/repo")
 
 from snacktory_spark.gif import count_gif_frames, decode_gif, iter_gif_frames
 from snacktory_spark.imaging import (ImageError, decode_bmp,

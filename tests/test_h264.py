@@ -1,13 +1,10 @@
 """H.264 I_PCM Baseline intra codec tests — the CONFORMANT video tier
 (lossless raw-sample macroblocks; no substituted tables, so round
 trips are bit-exact, not SNR-bounded). See snacktory_spark/h264.py."""
-import sys
 
 import numpy as np
 import pytest
 from hypothesis import given, settings, strategies as st
-
-sys.path.insert(0, "/root/repo")
 
 from snacktory_spark.h264 import (_ebsp_to_rbsp, _rbsp_to_ebsp, _se_read,
                                   _se_write, _ue_read, _ue_write,

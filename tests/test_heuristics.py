@@ -1,10 +1,6 @@
 """Configurable-heuristics API parity (ArticleTextExtractor.java:329-378):
 set/add pattern tunables + the extractor facade."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from golden_cases import fixture_text
 from snacktory_spark.extractor import extract
 from snacktory_spark.heuristics import ArticleTextExtractor, Heuristics

@@ -3,13 +3,10 @@ filter inversion (all 5 types), PPM, resize, features, hostile input."""
 
 import random
 import struct
-import sys
 import zlib
 
 import pytest
 from hypothesis import given, settings, strategies as st
-
-sys.path.insert(0, "/root/repo")
 
 from snacktory_spark.imaging import (PNG_SIG, ImageError, _chunk, decode_png,
                                      decode_ppm, encode_png, encode_ppm,

@@ -6,13 +6,10 @@ JDK Spark already requires)."""
 import shutil
 import struct
 import subprocess
-import sys
 
 import numpy as np
 import pytest
 from hypothesis import given, settings, strategies as st
-
-sys.path.insert(0, "/root/repo")
 
 from snacktory_spark.imaging import ImageError, sniff_decode
 from snacktory_spark.jpeg import decode_jpeg, encode_jpeg

@@ -5,13 +5,10 @@ See snacktory_spark/mpeg.py's module docstring for the two-tier honesty
 contract these tests pin down.
 """
 import struct
-import sys
 
 import numpy as np
 import pytest
 from hypothesis import given, settings, strategies as st
-
-sys.path.insert(0, "/root/repo")
 
 from snacktory_spark.imaging import ImageError
 from snacktory_spark.mpeg import (_M, _analyze, _filterbank, _synthesize,

@@ -1,13 +1,10 @@
 """PDF layout-parse tests: writer/extractor round-trip, operator coverage,
 hostile input, and the distributed binary-column path."""
 
-import sys
 import zlib
 
 import pytest
 from hypothesis import given, settings, strategies as st
-
-sys.path.insert(0, "/root/repo")
 
 from snacktory_spark.pdf import extract_pdf_text, make_simple_pdf
 

@@ -4,12 +4,12 @@ broadcast hash join into a nested loop, drops a pushed filter, or
 collapses a window onto one partition fails here."""
 
 import io
-import sys
+import os
 from contextlib import redirect_stdout
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+from conftest import REPO  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -49,7 +49,8 @@ def test_extraction_pushdown_and_single_exchange(spark):
     from snacktory_spark.pipeline.extract_job import (extracted_df,
                                                       read_transcripts)
     tdf = read_transcripts(
-        spark, "/root/repo/data/synth/sf0.001/transcripts.parquet")
+        spark, os.path.join(REPO, "data", "synth", "sf0.001",
+                            "transcripts.parquet"))
     plan = _check(plan_of(extracted_df(tdf)))
     assert "PushedFilters: [IsNotNull(text)]" in plan
     # exactly ONE exchange: the salted repartition (AQE may add query

@@ -5,11 +5,8 @@ equivalence against the exploded/string-gram formulations directly,
 including on constructed edge-case corpora the synth tables don't hit:
 all-identical tokens, single-bigram docs, sub-8-token bench docs)."""
 
-import sys
-
 import pytest
 
-sys.path.insert(0, "/root/repo")
 
 SF_DIR = "/root/testdata/sf0.01"
 

@@ -6,10 +6,6 @@ Reference: ArticleTextExtractorTest.java — testIssue4 (:840), testI4Online
 from scripts/port_tests.py via its hand_ported set.
 """
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from golden_cases import fixture_text
 from snacktory_spark.converter import read_file_as_string
 from snacktory_spark.extractor import extract

@@ -14,7 +14,8 @@ import sys
 import pytest
 
 sys.path.insert(0, os.path.dirname(__file__))
-sys.path.insert(0, "/root/repo/scripts")
+from conftest import REPO  # noqa: E402
+sys.path.insert(0, os.path.join(REPO, "scripts"))
 
 from golden_cases import KNOWN_DIVERGENCES  # noqa: E402
 

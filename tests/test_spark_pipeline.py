@@ -4,15 +4,14 @@ manifest/resume idempotency, golden-equality join. Uses sf0.001 synth data."""
 import math
 import os
 import shutil
-import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+from conftest import REPO  # noqa: E402
 
 from snacktory_spark.data.synth import generate  # noqa: E402
 
-SYNTH = "/root/repo/data/synth/sf0.001"
+SYNTH = os.path.join(REPO, "data", "synth", "sf0.001")
 
 
 @pytest.fixture(scope="module")
@@ -374,7 +373,8 @@ def test_bucketed_tables_join_without_shuffle(spark, synth_dir, tmp_path):
     # spark.sql.warehouse.dir is static per-session; use a dedicated db in
     # the default warehouse and drop it after (dir is gitignored). Clear any
     # leftover location from an interrupted earlier run first.
-    shutil.rmtree("/root/repo/spark-warehouse/bkt.db", ignore_errors=True)
+    shutil.rmtree(os.path.join(REPO, "spark-warehouse", "bkt.db"),
+                  ignore_errors=True)
     spark.sql("CREATE DATABASE IF NOT EXISTS bkt")
     df = spark.read.parquet(f"{synth_dir}/transcripts.parquet")
     (df.write.bucketBy(8, "conv_id").sortBy("conv_id")

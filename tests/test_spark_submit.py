@@ -1,7 +1,7 @@
 """End-to-end `spark-submit --py-files` launch — the north rule's cluster
 deployment path, exercised for real: package zip built from the repo, a
 FRESH JVM driven by the actual spark-submit binary from a cwd outside
-/root/repo (executors must import snacktory_spark from the zip, not the
+the checkout (executors must import snacktory_spark from the zip, not the
 checkout), idempotent-resume semantics verified across two submissions."""
 
 import json
@@ -13,7 +13,10 @@ import zipfile
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+from conftest import REPO  # noqa: E402
+
+INPUT = os.path.join(REPO, "data", "synth", "sf0.001",
+                     "transcripts.parquet")
 
 SPARK_SUBMIT = shutil.which("spark-submit") or "/opt/spark/bin/spark-submit"
 
@@ -24,18 +27,19 @@ pytestmark = pytest.mark.skipif(not os.path.exists(SPARK_SUBMIT),
 def _build_zip(path: str) -> str:
     zpath = os.path.join(path, "snacktory_spark.zip")
     with zipfile.ZipFile(zpath, "w", zipfile.ZIP_DEFLATED) as zf:
-        for root, _dirs, files in os.walk("/root/repo/snacktory_spark"):
+        for root, _dirs, files in os.walk(os.path.join(REPO,
+                                                       "snacktory_spark")):
             if "__pycache__" in root:
                 continue
             for f in files:
                 if f.endswith(".py"):
                     full = os.path.join(root, f)
-                    zf.write(full, os.path.relpath(full, "/root/repo"))
+                    zf.write(full, os.path.relpath(full, REPO))
     return zpath
 
 
 def _submit(zpath, args, cwd,
-            script="/root/repo/scripts/submit_extract.py"):
+            script=os.path.join(REPO, "scripts", "submit_extract.py")):
     env = dict(os.environ)
     env.pop("PYTHONPATH", None)  # the zip must be the ONLY import source
     out = subprocess.run(
@@ -53,7 +57,7 @@ def _submit(zpath, args, cwd,
 def test_spark_submit_pyfiles_end_to_end(tmp_path):
     zpath = _build_zip(str(tmp_path))
     out_dir = str(tmp_path / "out")
-    args = ["--input", "/root/repo/data/synth/sf0.001/transcripts.parquet",
+    args = ["--input", INPUT,
             "--output", out_dir, "--buckets", "4"]
     m1 = _submit(zpath, args, cwd=str(tmp_path))
     assert m1["output_rows"] > 0 and m1["error_rows"] == 0
@@ -81,9 +85,9 @@ def test_spark_submit_corpus_prep_end_to_end(tmp_path):
 
     zpath = _build_zip(str(tmp_path))
     out_dir = str(tmp_path / "prep")
-    args = ["--input", "/root/repo/data/synth/sf0.001/transcripts.parquet",
+    args = ["--input", INPUT,
             "--output", out_dir, "--buckets", "4"]
-    script = "/root/repo/scripts/submit_corpus_prep.py"
+    script = os.path.join(REPO, "scripts", "submit_corpus_prep.py")
 
     m1 = _submit(zpath, args, cwd=str(tmp_path), script=script)
     assert m1["extract"]["buckets_written"] == 4
@@ -115,11 +119,11 @@ def test_python_m_cli_entry(tmp_path):
     """`python -m snacktory_spark.pipeline.corpus_prep_job` works as a
     package entry point (no spark-submit, no scripts/ wrapper)."""
     env = dict(os.environ)
-    env["PYTHONPATH"] = "/root/repo"
+    env["PYTHONPATH"] = REPO
     out_dir = str(tmp_path / "prep")
     run = subprocess.run(
         [sys.executable, "-m", "snacktory_spark.pipeline.corpus_prep_job",
-         "--input", "/root/repo/data/synth/sf0.001/transcripts.parquet",
+         "--input", INPUT,
          "--output", out_dir, "--buckets", "2",
          "--master", "local[4]", "--shuffle-partitions", "4"],
         capture_output=True, text=True, timeout=420, cwd=str(tmp_path),

@@ -4,12 +4,13 @@ harness lives in scripts/streaming_soak.py (whose main() writes the
 BENCH/streaming_soak.md evidence); this test asserts its properties at
 the full 50-wave configuration."""
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/scripts")
+from conftest import REPO  # noqa: E402
+sys.path.insert(0, os.path.join(REPO, "scripts"))
 
 
 @pytest.fixture(scope="module")

@@ -1,11 +1,12 @@
 """Tests: training-data ops (dedup/similarity/quality/langid/ANN),
 structured-streaming extraction, multimodal plumbing."""
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+from conftest import REPO  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
 
@@ -99,7 +100,8 @@ def test_streaming_extraction(spark, tmp_path):
     from snacktory_spark.data.synth import generate
     from snacktory_spark.pipeline.streaming import run_streaming_once
 
-    sdir = generate("/root/repo/data/synth/sf0.001", sf=0.001)
+    sdir = generate(os.path.join(REPO, "data", "synth", "sf0.001"),
+                    sf=0.001)
     in_dir = tmp_path / "in"
     in_dir.mkdir()
     t = pq.read_table(f"{sdir}/transcripts.parquet")
@@ -168,7 +170,8 @@ def test_streaming_watermark_window(spark, tmp_path):
     from snacktory_spark.data.synth import generate
     from snacktory_spark.pipeline.streaming import run_streaming_stats_once
 
-    sdir = generate("/root/repo/data/synth/sf0.001", sf=0.001)
+    sdir = generate(os.path.join(REPO, "data", "synth", "sf0.001"),
+                    sf=0.001)
     in_dir = tmp_path / "sin"
     in_dir.mkdir()
     t = pq.read_table(f"{sdir}/transcripts.parquet")
@@ -221,7 +224,8 @@ def test_streaming_stateful_progress(spark, tmp_path):
     from snacktory_spark.data.synth import generate
     from snacktory_spark.pipeline.streaming import run_streaming_progress_once
 
-    sdir = generate("/root/repo/data/synth/sf0.001", sf=0.001)
+    sdir = generate(os.path.join(REPO, "data", "synth", "sf0.001"),
+                    sf=0.001)
     in_dir = tmp_path / "pin"
     in_dir.mkdir()
     t = pq.read_table(f"{sdir}/transcripts.parquet")
@@ -394,7 +398,8 @@ def test_streaming_rate_metrics_listener(spark, tmp_path):
     from snacktory_spark.data.synth import generate
     from snacktory_spark.pipeline.streaming import attach_rate_listener, run_streaming_once
 
-    sdir = generate("/root/repo/data/synth/sf0.001", sf=0.001)
+    sdir = generate(os.path.join(REPO, "data", "synth", "sf0.001"),
+                    sf=0.001)
     in_dir = tmp_path / "in"
     in_dir.mkdir()
     t = pq.read_table(f"{sdir}/transcripts.parquet")
@@ -653,7 +658,7 @@ def test_minhash_production_params_recall(spark):
     the parameterization documented in textops.minhash_signature actually
     delivers (VERDICT r2 item 6; full table in BENCH/minhash_recall.md)."""
     import sys
-    sys.path.insert(0, "/root/repo/scripts")
+    sys.path.insert(0, os.path.join(REPO, "scripts"))
     from minhash_recall import build_corpus, ground_truth
     from snacktory_spark.textops import lsh_candidate_pairs
 
@@ -711,7 +716,7 @@ def test_connected_components_resume_after_kill(spark, tmp_path):
     ckdir = str(tmp_path / "cc_resume")
     script = f"""
 import os, sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, {REPO!r})
 from pyspark.sql import SparkSession
 # patch the CONCRETE class (pyspark>=4 routes sessions through
 # pyspark.sql.classic, which overrides the abstract DataFrame.count)
@@ -787,7 +792,7 @@ def test_exact_substr_spans_hand_fixture(spark, tmp_path):
     distinct-doc df), whole-doc coverage, and the zero-dup empty output."""
     import importlib.util
     spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", "/root/repo/__spark_entry__.py")
+        "__spark_entry__", os.path.join(REPO, "__spark_entry__.py"))
     em = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(em)
     rows = [
@@ -833,7 +838,7 @@ def test_winnowing_shared_run_guarantee(spark, tmp_path):
     share none."""
     import importlib.util
     spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", "/root/repo/__spark_entry__.py")
+        "__spark_entry__", os.path.join(REPO, "__spark_entry__.py"))
     em = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(em)
     shared = "alpha beta gamma delta epsilon zeta eta"       # 7 tokens

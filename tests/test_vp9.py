@@ -2,13 +2,10 @@
 (exercised across the probability range, carry paths included) under
 the substituted-model honesty contract. See snacktory_spark/vp9.py."""
 import random
-import sys
 
 import numpy as np
 import pytest
 from hypothesis import given, settings, strategies as st
-
-sys.path.insert(0, "/root/repo")
 
 from snacktory_spark.imaging import ImageError
 from snacktory_spark.vp9 import (_BoolDecoder, _BoolEncoder,

@@ -1,12 +1,13 @@
 """WARC/1.0 parser/writer tests: both storage layouts, HTTP split,
 hostile input, fuzz. See snacktory_spark/warc.py."""
+import os
 import sys
 import zlib
 
 import pytest
 from hypothesis import given, settings, strategies as st
 
-sys.path.insert(0, "/root/repo")
+from conftest import REPO  # noqa: E402
 
 from snacktory_spark.imaging import ImageError
 from snacktory_spark.warc import (build_cdx, iter_warc_records,
@@ -208,7 +209,7 @@ def test_distributed_warc_to_extraction(tmp_path):
 
     from pyspark.sql import functions as F
 
-    sys.path.insert(0, "/root/repo/tests")
+    sys.path.insert(0, os.path.join(REPO, "tests"))
     from golden_cases import GOLDEN_CASES, fixture_bytes
 
     from snacktory_spark.pipeline.extract_job import (build_session,
@@ -454,7 +455,7 @@ def test_warc_to_extraction_end_to_end(tmp_path):
 
     from pyspark.sql import functions as F
 
-    sys.path.insert(0, "/root/repo/tests")
+    sys.path.insert(0, os.path.join(REPO, "tests"))
     from golden_cases import GOLDEN_CASES, fixture_bytes
 
     from snacktory_spark.converter import bytes_to_string
