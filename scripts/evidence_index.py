@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Generate EVIDENCE.md: one row per registered query mapping operator
 -> oracle kind -> pytest evidence -> plan-gate coverage (VERDICT r4
-next #6). Run from anywhere; writes /root/repo/EVIDENCE.md. Regenerate
+next #6). Run from anywhere; writes EVIDENCE.md at the checkout root. Regenerate
 after changing the registry: the script asserts queries()/oracle_sql()
 parity and fails if a composite mapping goes stale, so the committed
 output can't silently rot.

@@ -18,15 +18,17 @@ SF_DIR = "/root/testdata/sf0.01"
 
 
 def plan_of(df) -> str:
-    """The formatted plan with the RDD and exchange ids
-    (`MapPartitionsRDD[129]`, `plan_id=2949`) and this checkout's path
-    written as constants: they count what the Spark session ran before, so
-    without this two runs, or two checkouts, print one plan differently."""
+    """The formatted plan with the RDD, exchange and expression ids
+    (`MapPartitionsRDD[129]`, `plan_id=2949`, `doc_id#415L`) and this
+    checkout's path written as constants: they count what the Spark session
+    ran before, so without this two runs, or two checkouts, print one plan
+    differently."""
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain("formatted")
     plan = re.sub(r"RDD\[\d+\]", "RDD[N]", buf.getvalue())
     plan = re.sub(r"plan_id=\d+", "plan_id=N", plan)
+    plan = re.sub(r"#\d+", "#N", plan)
     return plan.replace(f"file:{ROOT}/", "file:<repo>/")
 
 

@@ -24,11 +24,13 @@ Prints a per-family table and exits nonzero on any leak.
 
 from __future__ import annotations
 
+import os
 import random
 import sys
 import traceback
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from snacktory_spark.imaging import ImageError  # noqa: E402
 

@@ -20,7 +20,8 @@ import random
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 VOCAB_SIZE = 4000
 DOC_TOKENS = 80
@@ -140,7 +141,7 @@ def main():
             hi_s = "1.0" if hi > 1 else f"{hi}"
             lines.append(f"| [{lo}, {hi_s}) | {n} | {hit} | {rec_s} |")
         lines.append("")
-    with open("/root/repo/BENCH/minhash_recall.md", "w") as f:
+    with open(os.path.join(REPO, "BENCH", "minhash_recall.md"), "w") as f:
         f.write("\n".join(lines))
     print("wrote BENCH/minhash_recall.md")
 

@@ -16,7 +16,8 @@ import os
 import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from snacktory_spark.converter import read_file_as_string
 from snacktory_spark.dates import format_date_utc, parse_with_patterns, _tokenize_java_pattern
@@ -402,7 +403,7 @@ def main():
     print(f"tests passing all parsed asserts: {len(report['pass'])}")
     print(f"tests with failures: {len(report['fail'])}")
     print(f"assert pass rate: {passed_asserts}/{total_asserts}")
-    with open("/root/repo/scripts/golden_report.json", "w") as f:
+    with open(os.path.join(REPO, "scripts", "golden_report.json"), "w") as f:
         json.dump(report, f, indent=1, ensure_ascii=False)
 
 

@@ -18,7 +18,8 @@ import sys
 
 import numpy as np
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 N_SUB, SUB_DIM = 4, 16
 K_LIST = (1, 10)
@@ -377,9 +378,10 @@ def main():
         "r@10-rerank >= 0.90 at nprobe=2 (measured "
         f"{k64[2]['r10_rerank']:.3f}) with scan fraction <= 0.05.",
     ]
-    with open("/root/repo/BENCH/pq_recall.md", "w") as f:
+    out_path = os.path.join(REPO, "BENCH", "pq_recall.md")
+    with open(out_path, "w") as f:
         f.write("\n".join(lines) + "\n")
-    print("wrote /root/repo/BENCH/pq_recall.md")
+    print(f"wrote {out_path}")
     spark.stop()
 
 

@@ -33,7 +33,8 @@ import sys
 
 import numpy as np
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -222,9 +223,10 @@ def main():
         "corpus with interleaved ids the straddle probability is "
         "~1/n_subclusters per ball, milder than this worst case.)",
     ]
-    with open("/root/repo/BENCH/semdedup_recall.md", "w") as f:
+    out_path = os.path.join(REPO, "BENCH", "semdedup_recall.md")
+    with open(out_path, "w") as f:
         f.write("\n".join(lines) + "\n")
-    print("wrote /root/repo/BENCH/semdedup_recall.md")
+    print(f"wrote {out_path}")
     spark.stop()
 
 

@@ -15,11 +15,13 @@ Usage: python scripts/skew_salt.py [n_replicates]
 
 from __future__ import annotations
 
+import os
 import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 PARTITIONS = 64
 SALT_SPAN = 64          # extract_job.DEFAULT_SALT_SPAN
@@ -155,9 +157,10 @@ def main():
         "hash (uniform by construction) — conversation-length skew "
         "cannot reach the UDF stage there.",
     ]
-    with open("/root/repo/BENCH/skew_salt.md", "w") as f:
+    out_path = os.path.join(REPO, "BENCH", "skew_salt.md")
+    with open(out_path, "w") as f:
         f.write("\n".join(lines) + "\n")
-    print("wrote /root/repo/BENCH/skew_salt.md")
+    print(f"wrote {out_path}")
     spark.stop()
 
 

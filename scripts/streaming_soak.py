@@ -40,7 +40,8 @@ import time
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 BASE = dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc)
 N_CONVS = 5
@@ -248,9 +249,10 @@ def main():
         " ".join(str(v) for v in res["rows_per_sec"]),
         "```",
     ]
-    with open("/root/repo/BENCH/streaming_soak.md", "w") as f:
+    out_path = os.path.join(REPO, "BENCH", "streaming_soak.md")
+    with open(out_path, "w") as f:
         f.write("\n".join(lines) + "\n")
-    print("wrote /root/repo/BENCH/streaming_soak.md")
+    print(f"wrote {out_path}")
     spark.stop()
 
 

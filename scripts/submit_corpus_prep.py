@@ -2,7 +2,7 @@
 
 Cluster deployment (the north-rule launch path):
 
-    cd /root/repo && zip -r /tmp/snacktory_spark.zip snacktory_spark
+    zip -r /tmp/snacktory_spark.zip snacktory_spark    # from the checkout root
     spark-submit --py-files /tmp/snacktory_spark.zip \
         scripts/submit_corpus_prep.py \
         --input  <transcripts parquet dir or iceberg identifier> \
@@ -15,7 +15,7 @@ directly — this file only exists because spark-submit wants a script):
 
     spark-submit --master local[8] --py-files /tmp/snacktory_spark.zip \
         scripts/submit_corpus_prep.py \
-        --input /root/repo/data/synth/sf0.001/transcripts.parquet \
+        --input data/synth/sf0.001/transcripts.parquet \
         --output /tmp/corpus_prep_out
 
 The chain is idempotently resumable at three commit levels — per-bucket
@@ -25,6 +25,7 @@ pipeline/corpus_prep_job.py for the full contract.
 
 from __future__ import annotations
 
+import os
 import sys
 
 
@@ -32,7 +33,9 @@ def _main() -> None:
     try:
         from snacktory_spark.pipeline.corpus_prep_job import main
     except ImportError:
-        sys.path.insert(0, "/root/repo")
+        # run from a checkout without --py-files: import its package
+        sys.path.insert(0, os.path.dirname(os.path.dirname(
+            os.path.abspath(__file__))))
         from snacktory_spark.pipeline.corpus_prep_job import main
     main()
 

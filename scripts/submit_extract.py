@@ -2,7 +2,7 @@
 
 Cluster deployment (the north-rule launch path):
 
-    cd /root/repo && zip -r /tmp/snacktory_spark.zip snacktory_spark
+    zip -r /tmp/snacktory_spark.zip snacktory_spark    # from the checkout root
     spark-submit --py-files /tmp/snacktory_spark.zip \
         scripts/submit_extract.py \
         --input  <parquet dir or iceberg table identifier> \
@@ -13,7 +13,7 @@ Local smoke:
 
     spark-submit --master local[8] --py-files /tmp/snacktory_spark.zip \
         scripts/submit_extract.py \
-        --input /root/repo/data/synth/sf0.001/transcripts.parquet \
+        --input data/synth/sf0.001/transcripts.parquet \
         --output /tmp/extract_out
 
 --partitions (default 2 × default parallelism) is the width of the UDF and
@@ -22,16 +22,18 @@ files per wave, rows in (conv_id, turn_idx) order.
 
 The job is idempotently resumable: rerunning after a kill reprocesses only
 buckets missing from <output>/_manifest (see pipeline/extract_job.py).
---output may be a scheme'd URI (file:, hdfs://, s3a://...): manifest I/O
-follows the output's Hadoop filesystem, so resume state lands next to the
-data on cluster deployments, and resuming against a different input or
-bucket count reprocesses instead of silently skipping.
+--output may be a scheme'd URI (file:, hdfs://, s3a://...): manifests
+resolve the output path as Spark's writer does (pipeline/jobfs.py), so
+resume state lands next to the data on cluster deployments, and resuming
+against a different input or bucket count reprocesses instead of silently
+skipping.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 
 
@@ -48,7 +50,9 @@ def main(argv=None):
     try:
         from snacktory_spark.pipeline.extract_job import build_session, run_extract
     except ImportError:
-        sys.path.insert(0, "/root/repo")
+        # run from a checkout without --py-files: import its package
+        sys.path.insert(0, os.path.dirname(os.path.dirname(
+            os.path.abspath(__file__))))
         from snacktory_spark.pipeline.extract_job import build_session, run_extract
 
     spark = build_session(app="snacktory-extract")

@@ -19,7 +19,8 @@ import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import pandas as pd  # noqa: E402
 
@@ -173,7 +174,7 @@ def main():
         "the largest archive file and one bounded by total bytes / "
         "total cores.",
     ]
-    out_path = "/root/repo/BENCH/warc_split.md"
+    out_path = os.path.join(REPO, "BENCH", "warc_split.md")
     with open(out_path, "w") as f:
         f.write("\n".join(lines) + "\n")
     print("\n".join(lines))

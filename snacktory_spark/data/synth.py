@@ -33,6 +33,9 @@ from ..dates import format_date_utc
 from ..extractor import extract
 
 REFERENCE = "/root/reference"
+# the committed synth tables of the checkout this package lives in
+SYNTH_ROOT = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__)))), "data", "synth")
 
 # golden fixtures embedded as transcript turns: (fixture_path, url, asserts)
 # assertion values copied from ArticleTextExtractorTest.java (cites in
@@ -249,7 +252,7 @@ def extraction_row(res: dict | None) -> dict:
     return row
 
 
-def synth_dir_for(sf_dir: str, root: str = "/root/repo/data/synth") -> str:
+def synth_dir_for(sf_dir: str, root: str = SYNTH_ROOT) -> str:
     return os.path.join(root, os.path.basename(os.path.normpath(sf_dir)) or "sf0.01")
 
 
@@ -370,7 +373,7 @@ def generate(out_dir: str, sf: float = 0.01, seed: int = 42,
     return out_dir
 
 
-def ensure_synth(sf_dir: str, root: str = "/root/repo/data/synth",
+def ensure_synth(sf_dir: str, root: str = SYNTH_ROOT,
                  include_extraction: bool = True) -> str:
     """Map a driver sf_dir to a generated synth dir (lazy, deterministic)."""
     out = synth_dir_for(sf_dir, root)

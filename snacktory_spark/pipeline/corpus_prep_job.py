@@ -82,9 +82,10 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from .corpus_ops import (exact_substr_spans, gate_survivors,
                          pack_sequences, tokens_expr, with_keeper,
                          zip_grams)
-from .extract_job import (DEFAULT_N_BUCKETS, DEFAULT_SALT_SPAN, _ManifestIO,
+from .extract_job import (DEFAULT_N_BUCKETS, DEFAULT_SALT_SPAN,
                           build_session, read_extracted, read_transcripts,
                           run_extract)
+from .jobfs import JobFS
 
 _SURVIVOR_COLS = ("role", "conv_id", "turn_idx", "text",
                   "is_keeper", "near_dup", "contaminated")
@@ -162,14 +163,14 @@ def run_corpus_prep(spark: SparkSession, input_path: str, output_path: str,
     config = dict(surv_config, seq_len=seq_len,
                   exact_substr_window=exact_substr_window)
 
-    mio = _ManifestIO(spark, out)
+    fs = JobFS(spark, out)
     metrics: dict = {"extract": ex}
 
     # ---- stages 2-4: gate + dedup election + decontamination flags ----
-    srec = mio.read_named("survivors.json") if resume else None
+    srec = fs.read_json("_manifest/survivors.json") if resume else None
     survivors_valid = (bool(ex.get("skipped")) and srec is not None
                        and srec.get("config") == surv_config
-                       and mio.out_exists("survivors/_SUCCESS"))
+                       and fs.exists("survivors/_SUCCESS"))
     if not survivors_valid:
         flagged = _survivor_flags(spark, out, bench, surv_config)
         (flagged.write.mode("overwrite").parquet(out + "/survivors"))
@@ -187,15 +188,15 @@ def run_corpus_prep(spark: SparkSession, input_path: str, output_path: str,
                             "dedup_rows": int(stats["dedup_rows"] or 0),
                             "near_rows": int(stats["near_rows"] or 0),
                             "clean_rows": int(stats["clean_rows"] or 0)}}
-        mio.write_named("survivors.json", srec)
+        fs.write_json("_manifest/survivors.json", srec)
         metrics["survivors_written"] = True
     metrics.update(srec["metrics"])
 
     # ---- stage 5: fixed-length sequence packing ----
-    crec = mio.read_named("chain.json") if resume else None
+    crec = fs.read_json("_manifest/chain.json") if resume else None
     packed_valid = (survivors_valid and crec is not None
                     and crec.get("config") == config
-                    and mio.out_exists("packed/_SUCCESS"))
+                    and fs.exists("packed/_SUCCESS"))
     if not packed_valid:
         clean = (spark.read.parquet(out + "/survivors")
                  .filter(F.col("is_keeper") & ~F.col("near_dup")
@@ -236,7 +237,7 @@ def run_corpus_prep(spark: SparkSession, input_path: str, output_path: str,
                 "metrics": {"n_sequences": int(pstats["n_sequences"]),
                             "n_tokens_packed":
                                 int(pstats["n_tokens_packed"] or 0)}}
-        mio.write_named("chain.json", crec)
+        fs.write_json("_manifest/chain.json", crec)
         metrics["packed_written"] = True
     metrics.update(crec["metrics"])
 

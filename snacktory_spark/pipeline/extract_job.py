@@ -47,18 +47,17 @@ resume is an O(buckets) filter, not a table diff.
 
 from __future__ import annotations
 
-import json
 import logging
 import math
 import os
 import re
-import shutil
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from ..schema import EXTRACTED_SCHEMA, TRANSCRIPT_SCHEMA
 from ..udf import extract_map_in_pandas
+from .jobfs import JobFS
 
 DEFAULT_SALT_SPAN = 64      # turns of one conv kept together per salt unit
 DEFAULT_N_BUCKETS = 64      # output commit granularity
@@ -182,122 +181,38 @@ def scan_rounds(df: DataFrame) -> float:
     return size / (spark.sparkContext.defaultParallelism * split)
 
 
-def manifest_dir(output_path: str) -> str:
-    return output_path.rstrip("/") + "/_manifest"
-
-
-_SCHEME_RE = re.compile(r"^[a-zA-Z][a-zA-Z0-9+.\-]*:")
-
-
 class _ManifestIO:
-    """Manifest I/O that follows output_path's filesystem scheme.
+    """The per-bucket manifest under <output_path>/_manifest, kept on the
+    filesystem Spark's writer uses for output_path (jobfs), so resume
+    state lives next to the data it certifies."""
 
-    Plain POSIX paths use local I/O (atomic via os.replace); scheme'd paths
-    (``file:``, ``hdfs:``, ``s3a:``, ...) go through the Hadoop FileSystem
-    API so resume state lands NEXT TO THE DATA on cluster deployments —
-    driver-local manifests for an s3:// output would strand resume state on
-    one machine (ADVICE r1). The ``file:`` scheme exercises the Hadoop
-    branch end-to-end in tests.
-    """
-
-    def __init__(self, spark: SparkSession | None, output_path: str):
-        self.out = output_path.rstrip("/")
-        self.mdir = manifest_dir(output_path)
-        self.hadoop = bool(_SCHEME_RE.match(output_path))
-        if self.hadoop:
-            if spark is None:
-                raise ValueError(
-                    f"manifest path {self.mdir!r} has a filesystem scheme; "
-                    "a SparkSession is required for Hadoop FileSystem I/O")
-            jvm = spark._jvm
-            self._jPath = jvm.org.apache.hadoop.fs.Path
-            self._fs = self._jPath(self.mdir).getFileSystem(
-                spark._jsc.hadoopConfiguration())
+    def __init__(self, spark: SparkSession, output_path: str):
+        self.fs = JobFS(spark, output_path)
 
     def write_atomic(self, rec: dict) -> None:
         """tmp+rename so a kill mid-write never leaves a corrupt manifest."""
-        self.write_named(f"bucket-{rec['bucket']:05d}.json", rec)
+        self.fs.write_json(f"_manifest/bucket-{rec['bucket']:05d}.json", rec)
 
-    def write_named(self, name: str, rec: dict) -> None:
-        """Atomic write of an arbitrary named manifest record (used by
-        corpus_prep_job for its chain-level record)."""
-        if self.hadoop:
-            dest = self._jPath(self.mdir + "/" + name)
-            tmp = self._jPath(self.mdir + "/" + name + ".tmp")
-            out = self._fs.create(tmp, True)
-            out.write(json.dumps(rec).encode("utf-8"))
-            out.close()
-            # hadoop rename does not overwrite; delete-then-rename leaves at
-            # worst a MISSING manifest (bucket re-runs — safe direction)
-            self._fs.delete(dest, False)
-            self._fs.rename(tmp, dest)
-        else:
-            os.makedirs(self.mdir, exist_ok=True)
-            path = os.path.join(self.mdir, name)
-            tmp = path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(rec, f)
-            os.replace(tmp, path)
-
-    def read_named(self, name: str) -> dict | None:
-        """Read one named manifest record; None when missing or torn."""
-        if self.hadoop:
-            p = self._jPath(self.mdir + "/" + name)
-            if not self._fs.exists(p):
-                return None
-            stream = self._fs.open(p)
-            try:
-                raw = bytes(stream.readAllBytes())
-            finally:
-                stream.close()
-            try:
-                return json.loads(raw)
-            except json.JSONDecodeError:
-                return None
-        path = os.path.join(self.mdir, name)
-        try:
-            with open(path) as f:
-                return json.load(f)
-        except (OSError, json.JSONDecodeError):
-            return None
-
-    def out_exists(self, rel: str) -> bool:
-        """Existence check for a path under output_path (e.g. the packed
-        sink's _SUCCESS marker), following the same filesystem scheme."""
-        full = self.out + "/" + rel
-        if self.hadoop:
-            return bool(self._fs.exists(self._jPath(full)))
-        return os.path.exists(full)
-
-    def iter_records(self):
-        if self.hadoop:
-            mpath = self._jPath(self.mdir)
-            if not self._fs.exists(mpath):
-                return
-            for st in self._fs.listStatus(mpath):
-                name = st.getPath().getName()
-                if not name.endswith(".json"):
-                    continue
-                stream = self._fs.open(st.getPath())
-                try:
-                    raw = bytes(stream.readAllBytes())
-                finally:
-                    stream.close()
-                try:
-                    yield json.loads(raw)
-                except json.JSONDecodeError:
-                    continue  # torn write from a killed run = incomplete
-        else:
-            if not os.path.isdir(self.mdir):
-                return
-            for name in os.listdir(self.mdir):
-                if not name.endswith(".json"):
-                    continue
-                try:
-                    with open(os.path.join(self.mdir, name)) as f:
-                        yield json.load(f)
-                except (json.JSONDecodeError, OSError):
-                    continue  # torn write from a killed run = incomplete
+    def load(self, expect_input_path: str | None = None,
+             expect_n_buckets: int | None = None) -> dict[int, dict]:
+        """The bucket records, by bucket (load_manifest)."""
+        out = {}
+        for name in self.fs.listdir("_manifest"):
+            if not name.endswith(".json"):
+                continue
+            row = self.fs.read_json("_manifest/" + name)
+            if row is None:
+                continue  # torn write from a killed run = incomplete
+            if (expect_input_path is not None
+                    and row.get("input_path") is not None
+                    and row["input_path"] != expect_input_path):
+                continue
+            if (expect_n_buckets is not None
+                    and row.get("n_buckets") is not None
+                    and int(row["n_buckets"]) != expect_n_buckets):
+                continue
+            out[int(row["bucket"])] = row
+        return out
 
     def clean_stale(self, keep: set[int]) -> list[int]:
         """Delete bucket data dirs and manifest records NOT certified
@@ -312,46 +227,20 @@ class _ManifestIO:
         "every bucket dir on disk has a matching manifest record".
         Returns the bucket numbers whose data dirs were removed."""
         removed = []
-        if self.hadoop:
-            opath = self._jPath(self.out)
-            if self._fs.exists(opath):
-                for st in self._fs.listStatus(opath):
-                    name = st.getPath().getName()
-                    if (st.isDirectory() and name.startswith("bucket=")):
-                        try:
-                            b = int(name.split("=", 1)[1])
-                        except ValueError:
-                            continue
-                        if b not in keep:
-                            self._fs.delete(st.getPath(), True)
-                            removed.append(b)
-            mpath = self._jPath(self.mdir)
-            if self._fs.exists(mpath):
-                for st in self._fs.listStatus(mpath):
-                    name = st.getPath().getName()
-                    b = _manifest_bucket(name)
-                    if b is not None and b not in keep:
-                        self._fs.delete(st.getPath(), False)
-        else:
-            if os.path.isdir(self.out):
-                for name in os.listdir(self.out):
-                    full = os.path.join(self.out, name)
-                    if os.path.isdir(full) and name.startswith("bucket="):
-                        try:
-                            b = int(name.split("=", 1)[1])
-                        except ValueError:
-                            continue
-                        if b not in keep:
-                            shutil.rmtree(full, ignore_errors=True)
-                            removed.append(b)
-            if os.path.isdir(self.mdir):
-                for name in os.listdir(self.mdir):
-                    b = _manifest_bucket(name)
-                    if b is not None and b not in keep:
-                        try:
-                            os.remove(os.path.join(self.mdir, name))
-                        except OSError:
-                            pass
+        for name in self.fs.listdir(dirs_only=True):
+            if not name.startswith("bucket="):
+                continue
+            try:
+                b = int(name.split("=", 1)[1])
+            except ValueError:
+                continue
+            if b not in keep:
+                self.fs.delete(name)
+                removed.append(b)
+        for name in self.fs.listdir("_manifest"):
+            b = _manifest_bucket(name)
+            if b is not None and b not in keep:
+                self.fs.delete("_manifest/" + name)
         removed = sorted(removed)
         if removed:
             # WARN with the explicit bucket list (ADVICE r3): this purge
@@ -360,7 +249,7 @@ class _ManifestIO:
             # is the job-log evidence of what was wiped.
             logging.getLogger(__name__).warning(
                 "clean_stale: removed %d stale bucket dir(s) under %s: %s",
-                len(removed), self.out, removed)
+                len(removed), self.fs.root, removed)
         return removed
 
 
@@ -374,25 +263,16 @@ def _manifest_bucket(name: str) -> int | None:
 def load_manifest(output_path: str, spark: SparkSession | None = None,
                   expect_input_path: str | None = None,
                   expect_n_buckets: int | None = None) -> dict[int, dict]:
-    """Read per-bucket completion records.
+    """Read per-bucket completion records (through the active session's
+    filesystem resolution when `spark` is not given).
 
     Records whose recorded input_path / n_buckets don't match the expected
     values are IGNORED (treated as incomplete): resuming the same output dir
     against a different input or bucket count must not silently skip work
     (ADVICE r1). Records written before these fields existed pass through.
     """
-    out = {}
-    for row in _ManifestIO(spark, output_path).iter_records():
-        if (expect_input_path is not None
-                and row.get("input_path") is not None
-                and row["input_path"] != expect_input_path):
-            continue
-        if (expect_n_buckets is not None
-                and row.get("n_buckets") is not None
-                and int(row["n_buckets"]) != expect_n_buckets):
-            continue
-        out[int(row["bucket"])] = row
-    return out
+    return _ManifestIO(spark or SparkSession.active(), output_path).load(
+        expect_input_path, expect_n_buckets)
 
 
 def udf_partitions(spark: SparkSession, partitions: int | None = None) -> int:
@@ -556,9 +436,7 @@ def _run_extract_waves(spark, input_path, output_path, n_buckets, salt_span,
     df_all = read_transcripts(spark, input_path)
 
     mio = _ManifestIO(spark, output_path)
-    done = load_manifest(output_path, spark=spark,
-                         expect_input_path=input_path,
-                         expect_n_buckets=n_buckets) if resume else {}
+    done = mio.load(input_path, n_buckets) if resume else {}
     # Purge bucket dirs/manifests not certified by `done` BEFORE processing:
     # an incompatible prior run (different input_path / n_buckets) or a
     # non-resume rerun leaves data dirs dynamic overwrite never clears,

@@ -77,10 +77,11 @@ def streaming_dedup_turns(spark: SparkSession, input_dir: str,
             .drop("text_sha"))  # internal key — keep the transcript shape
 
 
-def run_streaming_dedup_once(spark: SparkSession, input_dir: str,
-                             output_dir: str, checkpoint_dir: str,
-                             timeout_sec: int = 300) -> bool:
-    out = streaming_dedup_turns(spark, input_dir)
+def _drain_to_parquet(out, output_dir: str, checkpoint_dir: str,
+                      timeout_sec: int) -> bool:
+    """Append every currently-available input of the stream `out` to
+    parquet under output_dir, then stop (availableNow); True when the
+    query finished within timeout_sec."""
     query = (out.writeStream
              .format("parquet")
              .option("path", output_dir)
@@ -89,20 +90,20 @@ def run_streaming_dedup_once(spark: SparkSession, input_dir: str,
              .outputMode("append")
              .start())
     return query.awaitTermination(timeout_sec)
+
+
+def run_streaming_dedup_once(spark: SparkSession, input_dir: str,
+                             output_dir: str, checkpoint_dir: str,
+                             timeout_sec: int = 300) -> bool:
+    return _drain_to_parquet(streaming_dedup_turns(spark, input_dir),
+                             output_dir, checkpoint_dir, timeout_sec)
 
 
 def run_streaming_stats_once(spark: SparkSession, input_dir: str,
                              output_dir: str, checkpoint_dir: str,
                              timeout_sec: int = 300) -> bool:
-    out = streaming_conv_stats(spark, input_dir)
-    query = (out.writeStream
-             .format("parquet")
-             .option("path", output_dir)
-             .option("checkpointLocation", checkpoint_dir)
-             .trigger(availableNow=True)
-             .outputMode("append")
-             .start())
-    return query.awaitTermination(timeout_sec)
+    return _drain_to_parquet(streaming_conv_stats(spark, input_dir),
+                             output_dir, checkpoint_dir, timeout_sec)
 
 
 def streaming_conv_progress(spark: SparkSession, input_dir: str):
@@ -159,15 +160,8 @@ def run_streaming_progress_once(spark: SparkSession, input_dir: str,
 def run_streaming_once(spark: SparkSession, input_dir: str, output_dir: str,
                        checkpoint_dir: str, timeout_sec: int = 300) -> bool:
     """Drain all currently-available input files, then stop (availableNow)."""
-    out = streaming_extracted(spark, input_dir)
-    query = (out.writeStream
-             .format("parquet")
-             .option("path", output_dir)
-             .option("checkpointLocation", checkpoint_dir)
-             .trigger(availableNow=True)
-             .outputMode("append")
-             .start())
-    return query.awaitTermination(timeout_sec)
+    return _drain_to_parquet(streaming_extracted(spark, input_dir),
+                             output_dir, checkpoint_dir, timeout_sec)
 
 
 class RateMetricsListener:

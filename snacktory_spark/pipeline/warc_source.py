@@ -39,11 +39,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from .extract_job import ensure_py_files
+from .jobfs import JobFS
 
 _CDX_SCHEMA = ("path string, offset long, length long, warc_type string, "
                "target_uri string, payload_length long")
 _RANGE_SCHEMA = ("path string, offset long, target_uri string, "
                  "status int, content_type string, body binary")
+_PAGE_SCHEMA = "url string, html string"
 
 _SCHEME_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.\-]*:")
 
@@ -89,7 +91,7 @@ def _open_range_source(path: str):
     Bare POSIX paths use plain ``open``. Scheme'd paths (``file:``,
     ``s3a:``/``s3:``, ``hdfs:``, ``gs:``, ...) route through
     ``pyarrow.fs.FileSystem.from_uri`` — the executor-side analog of the
-    driver's Hadoop-FS manifest routing (``extract_job._ManifestIO``):
+    driver's job-state routing (``jobfs.JobFS``):
     executors cannot reach ``spark._jvm``, and pyarrow's filesystems
     give seek+read on local/S3/HDFS alike (VERDICT r5 #1: ``open()``
     only worked off local disk, but the 100-TB corpus this path exists
@@ -221,54 +223,12 @@ def _index_files_df(spark: SparkSession, files: DataFrame) -> DataFrame:
 _SNAP_RE = re.compile(r"^snap=(\d+)$")
 
 
-def _snap_io(spark: SparkSession, index_path: str):
-    """(listdir, exists, delete) closures for index_path, scheme-aware:
-    plain POSIX paths use os; scheme'd paths (file:, hdfs:, s3a:, ...)
-    go through the Hadoop FileSystem API so the index lands next to the
-    data on cluster deployments (the _ManifestIO rationale)."""
-    base = index_path.rstrip("/")
-    if _SCHEME_RE.match(index_path):
-        jvm = spark._jvm
-        jPath = jvm.org.apache.hadoop.fs.Path
-        fs = jPath(base).getFileSystem(spark._jsc.hadoopConfiguration())
-
-        def listdir():
-            p = jPath(base)
-            if not fs.exists(p):
-                return []
-            return [st.getPath().getName() for st in fs.listStatus(p)
-                    if st.isDirectory()]
-
-        def exists(rel):
-            return bool(fs.exists(jPath(base + "/" + rel)))
-
-        def delete(rel):
-            fs.delete(jPath(base + "/" + rel), True)
-    else:
-        import os
-        import shutil
-
-        def listdir():
-            if not os.path.isdir(base):
-                return []
-            return [n for n in os.listdir(base)
-                    if os.path.isdir(os.path.join(base, n))]
-
-        def exists(rel):
-            return os.path.exists(os.path.join(base, rel))
-
-        def delete(rel):
-            shutil.rmtree(os.path.join(base, rel), ignore_errors=True)
-
-    return listdir, exists, delete
-
-
-def _certified_snapshots(listdir, exists) -> list[int]:
+def _certified_snapshots(fs: JobFS) -> list[int]:
     out = []
-    for name in listdir():
+    for name in fs.listdir(dirs_only=True):
         m = _SNAP_RE.match(name)
-        if (m and exists(f"{name}/cdx/_SUCCESS")
-                and exists(f"{name}/files/_SUCCESS")):
+        if (m and fs.exists(f"{name}/cdx/_SUCCESS")
+                and fs.exists(f"{name}/files/_SUCCESS")):
             out.append(int(m.group(1)))
     return sorted(out)
 
@@ -282,13 +242,13 @@ def _write_snapshot(spark: SparkSession, index_path: str,
     only when a SECOND refresh lands. Single concurrent writer remains
     the contract; readers spanning 2+ refreshes must re-resolve via
     read_warc_index."""
-    listdir, exists, delete = _snap_io(spark, index_path)
+    fs = JobFS(spark, index_path)
     prior = set()
-    for d in listdir():
+    for d in fs.listdir(dirs_only=True):
         m = _SNAP_RE.match(d)
         if m:
             prior.add(int(m.group(1)))
-    certified = _certified_snapshots(listdir, exists)
+    certified = _certified_snapshots(fs)
     n = max(certified, default=-1) + 1
     while n in prior:  # skip uncertified debris at the target number
         n += 1
@@ -298,9 +258,9 @@ def _write_snapshot(spark: SparkSession, index_path: str,
     keep = {f"snap={n}"}
     if certified:
         keep.add(f"snap={certified[-1]}")
-    for name in listdir():  # prune all but the new + latest-prior snaps
+    for name in fs.listdir(dirs_only=True):  # prune all but new + N-1
         if _SNAP_RE.match(name) and name not in keep:
-            delete(name)
+            fs.delete(name)
     return spark.read.parquet(base + "/cdx")
 
 
@@ -339,8 +299,7 @@ def read_warc_index(spark: SparkSession, index_path: str,
     path_glob is required and a full build runs."""
     from pyspark.sql import functions as F
 
-    listdir, exists, _delete = _snap_io(spark, index_path)
-    snaps = _certified_snapshots(listdir, exists)
+    snaps = _certified_snapshots(JobFS(spark, index_path))
     if not snaps:
         if path_glob is None:
             raise ValueError(
@@ -475,6 +434,18 @@ def read_warc_ranges(spark: SparkSession, index_df: DataFrame,
     return idx.mapInPandas(fetch, _RANGE_SCHEMA)
 
 
+def _decode_pages(batches):
+    """mapInPandas body: range-read 200 responses → (url, html) pages,
+    the body decoded by converter.bytes_to_string (the fetch path's
+    charset detection and 500KB cap)."""
+    from snacktory_spark.converter import bytes_to_string
+    for pdf in batches:
+        yield pd.DataFrame({
+            "url": pdf["target_uri"],
+            "html": [bytes_to_string(bytes(b)) for b in pdf["body"]],
+        })
+
+
 def stream_warc_pages(spark: SparkSession, index_dir: str,
                       out_dir: str, checkpoint_dir: str,
                       num_partitions: int | None = None):
@@ -507,19 +478,9 @@ def stream_warc_pages(spark: SparkSession, index_dir: str,
     def handle(batch_df, batch_id):
         resp = read_warc_ranges(spark, batch_df, num_partitions)
         ok = resp.filter(resp["status"] == 200)
-
-        def decode(batches):
-            from snacktory_spark.converter import bytes_to_string
-            for pdf in batches:
-                yield pd.DataFrame({
-                    "url": pdf["target_uri"],
-                    "html": [bytes_to_string(bytes(b))
-                             for b in pdf["body"]],
-                })
-
         # batch_id-keyed overwrite = idempotent re-run (exactly-once
         # output when combined with the source-side checkpoint)
-        (ok.mapInPandas(decode, "url string, html string")
+        (ok.mapInPandas(_decode_pages, _PAGE_SCHEMA)
          .write.mode("overwrite")
          .parquet(f"{out_dir}/batch_id={int(batch_id)}"))
 
@@ -545,13 +506,4 @@ def warc_html_df(spark: SparkSession, path_glob: str,
     resp = read_warc_ranges(spark, warc_index_df(spark, path_glob),
                             num_partitions)
     ok = resp.filter(F.col("status") == 200)
-
-    def decode(batches):
-        from snacktory_spark.converter import bytes_to_string
-        for pdf in batches:
-            yield pd.DataFrame({
-                "url": pdf["target_uri"],
-                "html": [bytes_to_string(bytes(b)) for b in pdf["body"]],
-            })
-
-    return ok.mapInPandas(decode, "url string, html string")
+    return ok.mapInPandas(_decode_pages, _PAGE_SCHEMA)

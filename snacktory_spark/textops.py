@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .pipeline.corpus_ops import tokens_expr, zip_grams
+from .pipeline.jobfs import JobFS
 
 N_MINHASH = 8          # permutations (salts 0..7)
 N_BANDS = 4            # LSH bands of 2 rows each
@@ -382,19 +383,15 @@ def connected_components(pairs: DataFrame, src: str = "doc_a",
         spark = pairs.sparkSession
         base = checkpoint_dir.rstrip("/")
         seq = {"n": 0}
-        jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-        fs = jvm_path(base).getFileSystem(spark._jsc.hadoopConfiguration())
+        fs = JobFS(spark, base)
 
         def _pin(df):
-            path = f"{base}/state-{seq['n']:05d}.parquet"
+            name = f"state-{seq['n']:05d}.parquet"
             seq["n"] += 1
-            df.write.mode("overwrite").parquet(path)
-            return spark.read.parquet(path), path
+            df.write.mode("overwrite").parquet(f"{base}/{name}")
+            return spark.read.parquet(f"{base}/{name}"), name
 
-        def _drop(path):
-            if path is None:
-                return
-            fs.delete(jvm_path(path), True)
+        _drop = fs.delete
     else:
         if resume:
             raise ValueError("resume requires checkpoint_dir")
@@ -408,12 +405,9 @@ def connected_components(pairs: DataFrame, src: str = "doc_a",
     edges = labels = label_path = None
     if resume:
         # complete snapshots only: the kill may have half-written one
-        snaps = sorted(
-            s.getPath().getName()
-            for s in fs.listStatus(jvm_path(base))
-            if s.getPath().getName().startswith("state-")
-            and fs.exists(jvm_path(
-                f"{base}/{s.getPath().getName()}/_SUCCESS")))
+        snaps = sorted(name for name in fs.listdir()
+                       if name.startswith("state-")
+                       and fs.exists(f"{name}/_SUCCESS"))
         if len(snaps) < 2:
             raise ValueError(
                 f"cannot resume: {base} holds {len(snaps)} complete "

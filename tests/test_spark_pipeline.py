@@ -28,6 +28,20 @@ def synth_dir():
     return generate(SYNTH, sf=0.001)
 
 
+def test_synth_root_is_checkout_relative():
+    """ensure_synth / synth_dir_for default to this checkout's committed
+    synth tables, so a caller that passes no root (bench.py) reads its own
+    checkout's data, not another's."""
+    import inspect
+
+    from snacktory_spark.data.synth import ensure_synth, synth_dir_for
+
+    want = os.path.join(REPO, "data", "synth")
+    for fn in (synth_dir_for, ensure_synth):
+        assert inspect.signature(fn).parameters["root"].default == want
+    assert synth_dir_for("/elsewhere/sf0.1") == os.path.join(want, "sf0.1")
+
+
 def test_extracted_matches_local(spark, synth_dir):
     """Distributed Arrow-UDF extraction == single-node extraction, per turn."""
     from pyspark.sql import functions as F
@@ -103,8 +117,10 @@ def test_salting_spreads_mega_conversation(spark):
 
 
 def test_manifest_hadoop_fs_branch(spark, synth_dir, tmp_path):
-    """file:-scheme output routes manifest I/O through the Hadoop
-    FileSystem API — the code path cluster deployments (s3a/hdfs) use."""
+    """A file:-scheme output keeps its manifests under the URI's local
+    directory: manifest, resume and stale purge all resolve the scheme'd
+    path (jobfs qualifies it to file:, so its os backend does the I/O;
+    test_manifest_follows_writer_filesystem covers the Hadoop backend)."""
     from snacktory_spark.pipeline.extract_job import load_manifest, run_extract
 
     out = "file:" + str(tmp_path / "out_hfs")
@@ -123,8 +139,8 @@ def test_manifest_hadoop_fs_branch(spark, synth_dir, tmp_path):
                and r["first_input_file"] for r in nonempty)
     m2 = run_extract(spark, f"{synth_dir}/transcripts.parquet", out, n_buckets=4)
     assert m2.get("skipped") is True
-    # stale-purge must also work through the Hadoop FS branch: a 2-bucket
-    # rerun into the same file: dir removes bucket=2..3 data AND manifests
+    # stale-purge must also resolve the file: URI: a 2-bucket rerun into
+    # the same dir removes bucket=2..3 data AND manifests
     m3 = run_extract(spark, f"{synth_dir}/transcripts.parquet", out, n_buckets=2)
     assert m3["stale_buckets_removed"] >= 2
     local = tmp_path / "out_hfs"
@@ -134,6 +150,46 @@ def test_manifest_hadoop_fs_branch(spark, synth_dir, tmp_path):
                      if n.endswith(".json") and not n.startswith("."))
     assert visible == ["bucket-00000.json", "bucket-00001.json"]
     assert spark.read.parquet(out).count() == m3["output_rows"]
+
+
+def test_manifest_follows_writer_filesystem(spark, synth_dir, tmp_path):
+    """Manifests land where Spark's writer puts the data. Under a session
+    whose default filesystem is a viewfs mount table (keys set with
+    spark.conf.set, which only the session's Hadoop conf carries), the
+    schemeless output <tmp>/view/out resolves to file://<tmp>/real/out:
+    the bucket dirs and the _manifest records both land under real/, and
+    a rerun finds the records and skips. The mount resolves through
+    Hadoop's ViewFileSystem, so this exercises jobfs's Hadoop backend."""
+    import uuid
+
+    from snacktory_spark.pipeline.extract_job import run_extract
+    from snacktory_spark.pipeline.jobfs import JobFS
+
+    view, real = tmp_path / "view", tmp_path / "real"
+    view.mkdir()
+    real.mkdir()
+    table = "mt" + uuid.uuid4().hex[:12]
+    keys = {"fs.defaultFS": f"viewfs://{table}/",
+            f"fs.viewfs.mounttable.{table}.link.{view}": f"file://{real}"}
+    src = f"file:{synth_dir}/transcripts.parquet"
+    out = str(view / "out")
+    try:
+        for k, v in keys.items():
+            spark.conf.set(k, v)
+        assert JobFS(spark, out).root == f"viewfs://{table}{out}"
+        m1 = run_extract(spark, src, out, n_buckets=4)
+        assert m1["output_rows"] > 0
+        m2 = run_extract(spark, src, out, n_buckets=4)
+    finally:
+        for k in keys:
+            spark.conf.unset(k)
+    names = set(os.listdir(real / "out"))
+    assert {f"bucket={b}" for b in range(4)} <= names
+    manifests = sorted(n for n in os.listdir(real / "out" / "_manifest")
+                       if n.endswith(".json"))
+    assert manifests == [f"bucket-0000{b}.json" for b in range(4)]
+    assert os.listdir(view) == []
+    assert m2.get("skipped") is True
 
 
 def test_manifest_mismatch_forces_rerun(spark, synth_dir, tmp_path):
