@@ -12,13 +12,12 @@ Usage:
   python bench_extra.py [--ref ed92b9d] [--sf /root/testdata/sf1.0]
                         [--cpus 32] [--order BAAB,ABBA] [--out PATH]
 
-A = the reference tree (git archive of --ref into a temp dir, with its
-bench.py's hard-coded `sys.path.insert(0, "/root/repo")` rewritten to the
-exported tree so it imports ITS OWN package, not HEAD's). B = HEAD
-(/root/repo). Both trees share /root/repo/data/synth (SYNTH_ROOT is an
-absolute path in both), so input-layout changes benefit BOTH sides — the
-deltas reported here are CODE-only and therefore conservative for any
-round that also improved the generated input layout.
+A = the reference tree (git archive of --ref into a temp dir). B = the
+checkout this script lives in. bench.py hard-codes one absolute checkout
+on sys.path, so each side runs a copy of its own bench.py pinned to its
+own tree (pinned_bench) and imports ITS OWN package. Each tree reads the
+synth tables of its own checkout (SYNTH_ROOT is checkout-relative), so
+input-layout changes count on the side that made them.
 """
 
 from __future__ import annotations
@@ -26,6 +25,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import statistics
 import subprocess
 import sys
@@ -33,7 +33,23 @@ import tarfile
 import tempfile
 import time
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.abspath(__file__))
+
+
+def pinned_bench(tree: str, dest: str) -> str:
+    """Write `tree`'s bench.py to `dest`/bench.py with its first
+    `sys.path.insert(0, "<path>")` line, which pins one absolute checkout,
+    pointed at `tree`, so the bench imports that tree's package; returns
+    the written path. bench.py uses no path of its own, so the copy may
+    live anywhere."""
+    src = open(os.path.join(tree, "bench.py")).read()
+    pinned, n = re.subn(r'sys\.path\.insert\(0, "[^"]*"\)',
+                        f'sys.path.insert(0, "{tree}")', src, count=1)
+    assert n == 1, f"bench.py sys.path line not found in {tree}"
+    path = os.path.join(dest, "bench.py")
+    with open(path, "w") as f:
+        f.write(pinned)
+    return path
 
 
 def export_ref(ref: str) -> str:
@@ -44,21 +60,13 @@ def export_ref(ref: str) -> str:
     with tarfile.open(tar) as tf:
         tf.extractall(d, filter="data")
     os.unlink(tar)
-    # the exported bench.py must import the EXPORTED package: its
-    # sys.path line pins /root/repo, which would silently run HEAD code
-    bench = os.path.join(d, "bench.py")
-    src = open(bench).read()
-    patched = src.replace('sys.path.insert(0, "/root/repo")',
-                          f'sys.path.insert(0, "{d}")')
-    assert patched != src, "bench.py sys.path line not found in ref tree"
-    open(bench, "w").write(patched)
     return d
 
 
-def run_leg(tree: str, sf: str, cpus: int) -> dict:
+def run_leg(bench: str, sf: str, cpus: int) -> dict:
     env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf, SPARK_GRAFT_CPUS=str(cpus))
     t0 = time.time()
-    p = subprocess.run([sys.executable, os.path.join(tree, "bench.py")],
+    p = subprocess.run([sys.executable, bench],
                        env=env, cwd=tempfile.gettempdir(),
                        capture_output=True, text=True, timeout=3600)
     wall = round(time.time() - t0, 1)
@@ -79,13 +87,14 @@ def main() -> None:
     args = ap.parse_args()
 
     ref_tree = export_ref(args.ref)
-    trees = {"A": ref_tree, "B": REPO}
+    benches = {"A": pinned_bench(ref_tree, ref_tree),
+               "B": pinned_bench(REPO, tempfile.mkdtemp(prefix="ab_head_"))}
     legs = []
     seq = [c for block in args.order.split(",") for c in block]
     print(f"A={args.ref} ({ref_tree})  B=HEAD  sf={args.sf} "
           f"cpus={args.cpus}  order={''.join(seq)}", flush=True)
     for i, which in enumerate(seq):
-        rec = run_leg(trees[which], args.sf, args.cpus)
+        rec = run_leg(benches[which], args.sf, args.cpus)
         legs.append({"pos": i, "side": which, "value": rec["value"],
                      "queries": rec["queries"],
                      "replicate_totals": rec.get("replicate_totals"),

@@ -59,6 +59,17 @@ def main():
                      "ReadSchema: conv_id, turn_idx only; "
                      "PushedFilters: IsNotNull(turn_idx), GreaterThan(turn_idx,3)."))
 
+    # 2b. TPC-H Q1-style aggregate: filter and column pruning at the scan
+    sections.append(("pricing_summary (pushed filter + pruned scan)",
+                     plan_of(em.q_pricing_summary(spark, SF_DIR)),
+                     "ReadSchema carries only the five columns the "
+                     "aggregate reads (l_quantity, l_extendedprice, "
+                     "l_returnflag, l_linestatus, l_shipdate); the "
+                     "l_shipdate cut-off is PushedFilters "
+                     "IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate,"
+                     "1998-09-02T00:00); partial+final HashAggregate "
+                     "around one exchange on (l_returnflag, l_linestatus)."))
+
     # 3. broadcast join
     sections.append(("nation_orders (broadcast joins)",
                      plan_of(em.q_nation_orders(spark, SF_DIR)),

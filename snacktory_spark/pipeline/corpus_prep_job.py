@@ -29,7 +29,7 @@ first — a killed job resumes from the last committed level):
 
     <out>/extracted/   bucket=N parquet + per-bucket _manifest/ — the
                        expensive stage, delegated to run_extract's
-                       per-bucket manifest + anti-join resume (waves
+                       per-bucket records + anti-join resume (waves
                        sized from the input's bytes bound the in-flight
                        loss; see extract_job.py)
     <out>/survivors/   every quality-gate survivor annotated with its
@@ -50,6 +50,13 @@ fingerprint), the packed record with the full config — so changing the
 pack-only seq_len re-runs packing alone, never the expensive stages
 2-4. All manifest I/O follows the output path's filesystem scheme
 (local or Hadoop), so resume state lands next to the data on clusters.
+
+Each level's figures are counted by the write that commits it
+(extract_job.write_observed, a DataFrame.observe in the write's result
+stage): the extraction waves' manifests, the survivors record's
+gate/dedup/near/clean rows and the packed record's sequence and token
+counts. No level is read back to be counted: the one read of extracted/
+is stage 2's input, and the one read of survivors/ is packing's input.
 
 Stage shapes (the 100-TB audit):
   1. extraction — pushed-down scan → salted repartition → MapInPandas
@@ -84,7 +91,7 @@ from .corpus_ops import (exact_substr_spans, gate_survivors,
                          zip_grams)
 from .extract_job import (DEFAULT_N_BUCKETS, DEFAULT_SALT_SPAN,
                           build_session, read_extracted, read_transcripts,
-                          run_extract)
+                          run_extract, write_observed)
 from .jobfs import JobFS
 
 _SURVIVOR_COLS = ("role", "conv_id", "turn_idx", "text",
@@ -173,21 +180,14 @@ def run_corpus_prep(spark: SparkSession, input_path: str, output_path: str,
                        and fs.exists("survivors/_SUCCESS"))
     if not survivors_valid:
         flagged = _survivor_flags(spark, out, bench, surv_config)
-        (flagged.write.mode("overwrite").parquet(out + "/survivors"))
-        stats = (spark.read.parquet(out + "/survivors")
-                 .agg(F.count("*").alias("gate_rows"),
-                      F.sum(F.col("is_keeper").cast("long"))
-                      .alias("dedup_rows"),
-                      F.sum((F.col("is_keeper") & ~F.col("near_dup"))
-                            .cast("long")).alias("near_rows"),
-                      F.sum((F.col("is_keeper") & ~F.col("near_dup")
-                             & ~F.col("contaminated")).cast("long"))
-                      .alias("clean_rows")).collect()[0])
+        keeper = F.col("is_keeper") & ~F.col("near_dup")
         srec = {"config": surv_config,
-                "metrics": {"gate_rows": int(stats["gate_rows"]),
-                            "dedup_rows": int(stats["dedup_rows"] or 0),
-                            "near_rows": int(stats["near_rows"] or 0),
-                            "clean_rows": int(stats["clean_rows"] or 0)}}
+                "metrics": write_observed(flagged, out + "/survivors", {
+                    "gate_rows": F.count(F.lit(1)),
+                    "dedup_rows": F.count_if(F.col("is_keeper")),
+                    "near_rows": F.count_if(keeper),
+                    "clean_rows": F.count_if(
+                        keeper & ~F.col("contaminated"))})}
         fs.write_json("_manifest/survivors.json", srec)
         metrics["survivors_written"] = True
     metrics.update(srec["metrics"])
@@ -228,15 +228,11 @@ def run_corpus_prep(spark: SparkSession, input_path: str, output_path: str,
             clean, "role", ["conv_id", "turn_idx"], seq_len,
             bounds_from=read_transcripts(spark, input_path)
             .filter(F.col("turn_idx") == 0).select("conv_id"))
-        packed.write.mode("overwrite").parquet(out + "/packed")
-        pstats = (spark.read.parquet(out + "/packed")
-                  .agg(F.count("*").alias("n_sequences"),
-                       F.sum("n_tokens").alias("n_tokens_packed"))
-                  .collect()[0])
         crec = {"config": config,
-                "metrics": {"n_sequences": int(pstats["n_sequences"]),
-                            "n_tokens_packed":
-                                int(pstats["n_tokens_packed"] or 0)}}
+                "metrics": write_observed(packed, out + "/packed", {
+                    "n_sequences": F.count(F.lit(1)),
+                    "n_tokens_packed": F.coalesce(F.sum("n_tokens"),
+                                                  F.lit(0))})}
         fs.write_json("_manifest/chain.json", crec)
         metrics["packed_written"] = True
     metrics.update(crec["metrics"])

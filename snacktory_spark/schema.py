@@ -66,9 +66,10 @@ EXTRACT_SCHEMA = StructType([
 
 # flat output row: transcript key columns + extraction columns + lineage.
 # input_bytes/input_file make the written output self-describing: the
-# per-bucket manifest (rows, input/output bytes, source files) is derived
-# from ONE scan of the written data — no separate metrics passes over the
-# 100-TB input text column (VERDICT r1 wrong #4).
+# manifest figures (rows, input/output bytes, source files) are aggregates
+# over the rows written, observed by the write itself — no separate
+# metrics pass over the 100-TB input text column (VERDICT r1 wrong #4),
+# and no read-back of the output.
 EXTRACTED_SCHEMA = StructType(
     [
         StructField("conv_id", StringType(), False),
@@ -84,13 +85,3 @@ EXTRACTED_SCHEMA = StructType(
         StructField("input_file", StringType(), True),
     ]
 )
-
-MANIFEST_SCHEMA = StructType([
-    StructField("bucket", IntegerType(), False),
-    StructField("input_rows", LongType(), True),
-    StructField("output_rows", LongType(), True),
-    StructField("input_bytes", LongType(), True),
-    StructField("output_bytes", LongType(), True),
-    StructField("ok_rows", LongType(), True),
-    StructField("error_rows", LongType(), True),
-])

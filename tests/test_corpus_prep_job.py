@@ -280,3 +280,44 @@ def test_exact_substr_cut_stage(spark, tmp_path):
     # both copies of the 12-token common run are cut: 24 fewer tokens
     assert m_off["n_tokens_packed"] - m_cut["n_tokens_packed"] == 24
     assert m_cut["clean_rows"] == 2  # survivors metrics unchanged
+
+
+def test_levels_are_counted_without_read_back(spark, synth_dir, bench_path,
+                                              tmp_path, monkeypatch):
+    """A fresh run counts every level from its write: extracted/ is read
+    once, as stage 2's input; survivors/ once, as packing's input (the
+    materialized survivors keep packing's branches from recomputing
+    stages 2-4); packed/ never. The observed figures equal counts read
+    back from the written survivors and packed tables."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.readwriter import DataFrameReader
+    from snacktory_spark.pipeline.corpus_prep_job import run_corpus_prep
+
+    out = str(tmp_path / "prep")
+    reads = []
+    real_parquet = DataFrameReader.parquet
+
+    def spying_parquet(self, *paths, **options):
+        reads.extend(paths)
+        return real_parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spying_parquet)
+    m = run_corpus_prep(spark, f"{synth_dir}/transcripts.parquet", out,
+                        n_buckets=4, bench_grams_path=bench_path)
+    monkeypatch.undo()
+    assert reads.count(out + "/extracted") == 1
+    assert reads.count(out + "/survivors") == 1
+    assert not [p for p in reads if p.startswith(out + "/packed")]
+
+    surv = spark.read.parquet(out + "/survivors")
+    keeper = F.col("is_keeper") & ~F.col("near_dup")
+    want = surv.agg(F.count("*").alias("gate_rows"),
+                    F.count_if("is_keeper").alias("dedup_rows"),
+                    F.count_if(keeper).alias("near_rows"),
+                    F.count_if(keeper & ~F.col("contaminated"))
+                    .alias("clean_rows")).collect()[0].asDict()
+    assert {k: m[k] for k in want} == want
+    assert want["gate_rows"] > want["dedup_rows"] > want["clean_rows"] > 0
+    packed = spark.read.parquet(out + "/packed")
+    assert m["n_sequences"] == packed.count() > 0
+    assert m["n_tokens_packed"] == packed.agg(F.sum("n_tokens")).first()[0]

@@ -73,6 +73,16 @@ def test_golden_assertions_all_pass(spark, synth_dir):
     assert not bad, f"failed golden rows: {bad[:3]}"
 
 
+def _waves(manifest: dict) -> dict:
+    """The distinct wave figures of a manifest, keyed by the wave's
+    buckets (every bucket record of a wave carries the same figures)."""
+    return {tuple(r["wave"]["buckets"]): r["wave"] for r in manifest.values()}
+
+
+def _wave_sum(manifest: dict, key: str) -> int:
+    return sum(w[key] for w in _waves(manifest).values())
+
+
 def test_pipeline_manifest_and_resume(spark, synth_dir, tmp_path):
     from snacktory_spark.pipeline.extract_job import load_manifest, run_extract
 
@@ -81,14 +91,14 @@ def test_pipeline_manifest_and_resume(spark, synth_dir, tmp_path):
     assert m1["output_rows"] > 0
     assert m1["buckets_written"] >= 1
     manifest = load_manifest(out)
-    assert sum(r["output_rows"] for r in manifest.values()) == m1["output_rows"]
+    assert _wave_sum(manifest, "output_rows") == m1["output_rows"]
 
     # resume: everything complete → no work
     m2 = run_extract(spark, f"{synth_dir}/transcripts.parquet", out, n_buckets=4)
     assert m2.get("skipped") is True
 
     # drop one NON-EMPTY bucket's manifest → only that bucket reprocessed
-    some_bucket = next(b for b, r in manifest.items() if r["output_rows"] > 0)
+    some_bucket = next(b for b, r in manifest.items() if r["has_rows"])
     os.remove(os.path.join(out, "_manifest", f"bucket-{some_bucket:05d}.json"))
     m3 = run_extract(spark, f"{synth_dir}/transcripts.parquet", out, n_buckets=4)
     assert m3["buckets_written"] == 1
@@ -131,12 +141,13 @@ def test_manifest_hadoop_fs_branch(spark, synth_dir, tmp_path):
     visible = sorted(n for n in os.listdir(mdir) if not n.startswith("."))
     assert visible == [f"bucket-0000{b}.json" for b in range(4)]
     manifest = load_manifest(out, spark=spark)
-    assert sum(r["output_rows"] for r in manifest.values()) == m1["output_rows"]
+    assert _wave_sum(manifest, "output_rows") == m1["output_rows"]
     assert all(r["n_buckets"] == 4 for r in manifest.values())
     # input text is parquet of non-empty rows → lineage + byte metrics real
-    nonempty = [r for r in manifest.values() if r["output_rows"] > 0]
-    assert all(r["input_bytes"] > 0 and r["n_input_files"] >= 1
-               and r["first_input_file"] for r in nonempty)
+    nonempty = [r["wave"] for r in manifest.values() if r["has_rows"]]
+    assert nonempty
+    assert all(w["input_bytes"] > 0 and w["approx_input_files"] >= 1
+               and w["first_input_file"] for w in nonempty)
     m2 = run_extract(spark, f"{synth_dir}/transcripts.parquet", out, n_buckets=4)
     assert m2.get("skipped") is True
     # stale-purge must also resolve the file: URI: a 2-bucket rerun into
@@ -603,28 +614,118 @@ def test_empty_input_completes_and_resumes(spark, tmp_path):
     assert run_extract(spark, src, out, n_buckets=4).get("skipped") is True
 
 
-def test_manifest_read_failure_fails_the_run(spark, synth_dir, tmp_path,
-                                             monkeypatch):
-    """A failed read of the written output must fail the run and write no
-    manifest: certifying the wave's buckets as empty would make every
-    resume skip them for good."""
-    from pyspark.errors import AnalysisException
-    from pyspark.sql.readwriter import DataFrameReader
+def test_observation_failure_fails_the_run(spark, synth_dir, tmp_path,
+                                           monkeypatch):
+    """If the write's observed figures cannot be read, the run fails and
+    writes no manifest: certifying the wave's buckets without figures
+    would make every resume skip them for good."""
+    from pyspark.sql import Observation
     from snacktory_spark.pipeline.extract_job import load_manifest, run_extract
 
-    out = str(tmp_path / "out_unreadable")
-    real_parquet = DataFrameReader.parquet
+    def failing_get(self):
+        raise RuntimeError("simulated observation failure")
 
-    def failing_parquet(self, *paths, **options):
-        if out in paths:
-            raise AnalysisException("simulated listing failure")
-        return real_parquet(self, *paths, **options)
-
-    monkeypatch.setattr(DataFrameReader, "parquet", failing_parquet)
-    with pytest.raises(AnalysisException, match="simulated listing failure"):
+    out = str(tmp_path / "out_unobserved")
+    monkeypatch.setattr(Observation, "get", property(failing_get))
+    with pytest.raises(RuntimeError, match="simulated observation failure"):
         run_extract(spark, f"{synth_dir}/transcripts.parquet", out,
                     n_buckets=4, resume=False)
+    monkeypatch.undo()
     assert load_manifest(out) == {}
+
+
+def test_run_extract_never_reads_its_output(spark, synth_dir, tmp_path,
+                                            monkeypatch):
+    """A fresh run counts its waves from the writes: no parquet read of
+    the output path (a read-back costs a listing job plus an aggregate
+    job per wave)."""
+    from pyspark.sql.readwriter import DataFrameReader
+    from snacktory_spark.pipeline.extract_job import run_extract
+
+    out = str(tmp_path / "out_noread")
+    src = f"{synth_dir}/transcripts.parquet"
+    reads = []
+    real_parquet = DataFrameReader.parquet
+
+    def spying_parquet(self, *paths, **options):
+        reads.extend(paths)
+        return real_parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spying_parquet)
+    m = run_extract(spark, src, out, n_buckets=4, resume=False)
+    monkeypatch.undo()
+    assert m["output_rows"] > 0
+    assert reads == [src]
+
+
+def _error_row_input(synth_dir, tmp_path) -> str:
+    """sf0.001's transcripts plus one turn the extractor raises on
+    (RecursionError on 40,000 nested tags, reported as extract_ok=false)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(f"{synth_dir}/transcripts.parquet")
+    row = {c: [None] for c in t.column_names}
+    row.update(conv_id=["deep-0"], turn_idx=[0], role=["tool"],
+               text=["<b>" * 40_000 + "x"])
+    src = str(tmp_path / "with_error.parquet")
+    pq.write_table(pa.concat_tables(
+        [t, pa.table(row, schema=t.schema)]), src)
+    return src
+
+
+@pytest.mark.parametrize("case", ["plain", "multi_wave", "error_row"])
+def test_observed_figures_equal_the_table(spark, synth_dir, tmp_path, case):
+    """Each wave's observed figures equal a groupBy over the rows the
+    wave wrote, has_rows marks exactly the buckets with rows, and the
+    returned totals are the waves' sums."""
+    from pyspark.sql import functions as F
+    from snacktory_spark.pipeline.extract_job import (load_manifest,
+                                                      read_extracted,
+                                                      run_extract)
+
+    src = (_error_row_input(synth_dir, tmp_path) if case == "error_row"
+           else f"{synth_dir}/transcripts.parquet")
+    out = str(tmp_path / f"out_{case}")
+    key = "spark.sql.files.maxPartitionBytes"
+    prev_split = spark.conf.get(key)
+    if case == "multi_wave":
+        spark.conf.set(key, "16k")  # as in the kill test: several waves
+    try:
+        m = run_extract(spark, src, out, n_buckets=8, resume=False)
+    finally:
+        spark.conf.set(key, prev_split)
+    assert (m["waves"] > 1) == (case == "multi_wave")
+    assert m["error_rows"] == (1 if case == "error_row" else 0)
+
+    manifest = load_manifest(out)
+    assert sorted(manifest) == list(range(8))
+    waves = _waves(manifest)
+    assert len(waves) == m["waves"]
+    assert sorted(b for bs in waves for b in bs) == list(range(8))
+    table = read_extracted(spark, out)
+    with_rows = {r["bucket"] for r in table.select("bucket").distinct()
+                 .collect()}
+    assert {b for b, r in manifest.items() if r["has_rows"]} == with_rows
+    for buckets, fig in waves.items():
+        want = (table.filter(F.col("bucket").isin(list(buckets)))
+                .agg(F.count("*").alias("output_rows"),
+                     F.sum("input_bytes").alias("input_bytes"),
+                     F.sum("output_bytes").alias("output_bytes"),
+                     F.count_if("extract_ok").alias("ok_rows"),
+                     F.count_if(~F.col("extract_ok")).alias("error_rows"),
+                     F.approx_count_distinct("conv_id").alias("approx_convs"),
+                     F.approx_count_distinct("input_file")
+                     .alias("approx_input_files"),
+                     F.min("input_file").alias("first_input_file"))
+                .collect()[0].asDict())
+        want["input_bytes"] = want["input_bytes"] or 0
+        want["output_bytes"] = want["output_bytes"] or 0
+        assert {k: fig[k] for k in want} == want, buckets
+    for k in ("output_rows", "input_bytes", "ok_rows", "error_rows"):
+        assert m[k] == sum(w[k] for w in waves.values()), k
+    assert m["input_rows"] == m["output_rows"] == table.count()
+    assert m["buckets_written"] == len(with_rows)
 
 
 def test_pyfiles_zip_is_content_addressed(tmp_path, monkeypatch):
